@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from indexlab_spark.session import env_int
+
 _RINGS: dict[int, list] = {}
 # r16: ring size is deployment-tunable. On a single shared JVM
 # (local-mode bench/correctness flows) live pins compete with
@@ -40,7 +42,7 @@ _RINGS: dict[int, list] = {}
 # bound can be raised freely.
 import os as _os
 
-RING_MAX = int(_os.environ.get("SPARK_GRAFT_PIN_RING", "8"))
+RING_MAX = env_int("SPARK_GRAFT_PIN_RING", 8, minimum=0)
 MAX_RINGS = 4
 
 

@@ -38,19 +38,6 @@ def _hash_ngram_dim(model: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def _text_ngrams(text: str):
-    """char-3-grams of each lowercase token, with ^ $ boundary padding."""
-    for tok in _TOKEN_RE.split(text.lower()):
-        if not tok:
-            continue
-        padded = f"^{tok}$"
-        if len(padded) <= 3:
-            yield padded
-        else:
-            for i in range(len(padded) - 2):
-                yield padded[i : i + 3]
-
-
 # token -> (bucket indices, signs) cache. Natural-language token
 # frequency is Zipfian, so almost all crc32 work is redundant without
 # this; the cache is per-process (executor-global under Spark, mirroring

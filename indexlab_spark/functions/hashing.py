@@ -29,14 +29,6 @@ def md5_long(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(_c(col)), 1, 15), 16, 10).cast("bigint")
 
 
-def seeded_md5(col: Column | str, seed: int) -> Column:
-    """Seeded md5 hex — one independent 'permutation' per seed.
-
-    DuckDB equivalent: md5(concat('<seed>|', x))
-    """
-    return F.md5(F.concat(F.lit(f"{seed}|"), _c(col)))
-
-
 def token_shingles(text_col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of lowercase whitespace tokens.
 

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from indexlab_spark.session import local_frame
+
 # zip_index pins its input across its two passes; bounded ring of pinned
 # frames (callers materialize lazily, so we can't unpersist immediately).
 _ZIP_CACHE: list[DataFrame] = []
@@ -105,7 +107,7 @@ def zip_index(df: DataFrame, out_col: str) -> DataFrame:
         offsets.append((int(pid), acc))
         acc += int(cnt)
     off = F.broadcast(
-        df.sparkSession.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+        local_frame(df.sparkSession, offsets or [(0, 0)], "_pid int, _off long")
     )
     within = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
     return (

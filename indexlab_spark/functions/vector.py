@@ -44,20 +44,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     d = dot(a, b)
     na, nb = l2_norm(a), l2_norm(b)
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
-
-
-def l2_normalize(a: Column | str) -> Column:
-    """Unit-normalize an array<float> column (float32 output, matching the
-    reference embedder's normalize flag, embedder.py:14-15).
-
-    The norm divides in via ``zip_with`` against ``array_repeat(n, d)``:
-    referencing the norm aggregate inside a ``transform`` lambda
-    re-evaluates it PER ELEMENT (no CSE inside lambdas — the same
-    pitfall shingles_from_tokens documents), turning normalization into
-    O(d^2) per row; array_repeat evaluates the norm once."""
-    av = _c(a).cast("array<double>")
-    n = l2_norm(a)
-    divided = F.zip_with(
-        av, F.array_repeat(n, F.size(av)), lambda x, nn: x / nn
-    )
-    return F.when(n > 0, divided).otherwise(av).cast("array<float>")

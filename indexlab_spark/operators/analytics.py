@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from indexlab_spark.config import HIST_BINS
+from indexlab_spark.session import local_frame
 
 
 def length_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -59,8 +60,8 @@ def histogram(
     vals = df.select(v.cast("long").alias("val"))
     srow = vals.agg(F.min("val").alias("vmin"), F.max("val").alias("vmax")).collect()
     if not srow or srow[0]["vmin"] is None:
-        return df.sparkSession.createDataFrame(
-            [], "bin int, lo long, hi long, cnt long"
+        return local_frame(
+            df.sparkSession, [], "bin int, lo long, hi long, cnt long"
         )
     vmin, vmax = int(srow[0]["vmin"]), int(srow[0]["vmax"])
     import math as _math
@@ -3802,8 +3803,8 @@ def sliding_distinct(
         F.min("_d").alias("lo"), F.max("_d").alias("hi")
     ).first()
     if bounds["lo"] is None:
-        return df.sparkSession.createDataFrame(
-            [], "day date, distinct_keys long, window_days int"
+        return local_frame(
+            df.sparkSession, [], "day date, distinct_keys long, window_days int"
         )
     if sketch:
         daily = kd.groupBy("_d").agg(
@@ -4329,7 +4330,8 @@ def sequence_pairs(
     )
     n_seqs_total = se.select("_s").distinct().count()
     if n_seqs_total == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "antecedent string, consequent string, n_seqs long,"
             " support double",
@@ -4677,8 +4679,8 @@ def quantile_map(
     if n_ref == 0:
         raise ValueError("quantile_map: empty reference distribution")
     if n_new == 0:
-        return new_df.sparkSession.createDataFrame(
-            [], "value double, p double, mapped double"
+        return local_frame(
+            new_df.sparkSession, [], "value double, p double, mapped double"
         )
     rmap = _pin_(rmap, deser=True)  # feeds targets AND ref_ranges
     # targets: Hazen p per distinct new value, bracketing ref positions
@@ -4803,7 +4805,8 @@ def _srm_table(
     reader feeds it the folded per-batch state, so drained-stream
     results EXACTLY equal the one-shot check."""
     spark = counts.sparkSession
-    exp = spark.createDataFrame(
+    exp = local_frame(
+        spark,
         [(k, float(s)) for k, s in expected.items()],
         "variant string, expected_share double",
     )
@@ -6014,7 +6017,8 @@ def partial_corr_matrix(
                     int(n),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "col_a string, col_b string, corr double, partial_corr double,"
         " n long",
@@ -6190,7 +6194,8 @@ def stationary_distribution(
         if tol is not None and res < tol:
             break
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (str(s), round(float(pi[idx[s]]), 6), n, it, float(res))
             for s in states
@@ -7049,7 +7054,8 @@ def markov_attribution(
             )
         )
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "channel string, removal_effect double, share double,"
         " attributed_conversions double, n_conversions long,"

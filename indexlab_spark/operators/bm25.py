@@ -11,17 +11,23 @@ Reference behavior (/root/reference/app/ingest/hybrid.py:4-12): tokenize
         idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
 
 The reference rebuilds the whole model per request
-(answerless_search.py:242) — the anti-pattern SURVEY §4 flags. Here term
-stats are *materialized once per index version* (``bm25_build``) and
-scoring is a pure join + aggregation:
+(answerless_search.py:242) — the anti-pattern SURVEY §4 flags. Here the
+term stats (``bm25_build``) are separate from scoring, which is a pure
+join + aggregation, so a caller CAN build them once per index version and
+score many query batches against them. ``pipeline.search(...,
+hybrid=True)`` does not: it calls ``bm25_search``, which rebuilds the term
+stats from the index's chunks on every call, exactly like the reference:
+a one-query hybrid search runs about 40 Spark jobs against about 11
+without BM25 (1,000-document corpus).
 
 - ``term_stats``: one row per (doc, term) with tf — partitioned by term
   for the query-side join; at 100 TB this is a bucketable layout.
 - scoring shuffles only (query_terms x matching docs), never the corpus;
   query term lists are tiny and broadcast.
 
-Everything is JVM-side SQL — no Python in the path — and deliberately
-expressible 1:1 in the DuckDB oracle.
+Scoring is JVM-side SQL — no Python in the path — and deliberately
+expressible 1:1 in the DuckDB oracle; only the build's postings pass
+(``_raw_postings``) runs Python, in Arrow batches.
 """
 
 from __future__ import annotations

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from indexlab_spark.functions.cache import pin as _pin
 from indexlab_spark.operators.textstats import STOPWORDS, tokens
 from indexlab_spark.plans.colocate import fan_out as _fan_out
+from indexlab_spark.session import local_frame
 
 #: train_quality_classifier per-epoch fan-in switch: up to this many
 #: input partitions the (d+3)-double partial rows are collected straight
@@ -600,7 +601,8 @@ def token_budget_mix(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    bdf = spark.createDataFrame(
+    bdf = local_frame(
+        spark,
         [(k, int(v)) for k, v in sorted(budgets.items())],
         f"{group_col} string, budget bigint",
     )
@@ -976,8 +978,8 @@ def semantic_decontaminate(
         )
     else:
         if not b_rows:
-            out = spark.createDataFrame(
-                [], f"id {id_t}, max_sim double, nearest_bench_id {bid_t}"
+            out = local_frame(
+                spark, [], f"id {id_t}, max_sim double, nearest_bench_id {bid_t}"
             )
         else:
             b_ids = np.array([r[0] for r in b_rows])
@@ -1395,7 +1397,8 @@ def isotonic_calibrate(
                 round(float(r["mean_score"]), 6),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "bin int, lo double, hi double, n bigint, positives bigint, "
         "raw_rate double, calibrated double, mean_score double",
@@ -1452,8 +1455,8 @@ def negative_samples(
     ).distinct()
     n_docs = docs.count()  # one catalog-sized scalar, sizes the shards
     if n_docs == 0:
-        return positives.sparkSession.createDataFrame(
-            [], f"{query_col} string, {doc_col} string, pick_rank int"
+        return local_frame(
+            positives.sparkSession, [], f"{query_col} string, {doc_col} string, pick_rank int"
         )
     n_buckets = max(1, -(-n_docs // bucket_target))
     docs_b = docs.withColumn(

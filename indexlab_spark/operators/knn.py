@@ -25,6 +25,7 @@ what makes the DuckDB oracle hash-comparable.
 
 from __future__ import annotations
 
+import os as _os
 from typing import Iterator
 
 import numpy as np
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from indexlab_spark.functions.vector import dot, l2_norm
+from indexlab_spark.session import env_int, local_frame
 
 
 def _rank_window(query_id_col: str, tie_col: str):
@@ -58,22 +60,12 @@ MAX_COLLECT_QUERY_ROWS = 250_000
 #: the GIL) recovers the rest. _LLOYD_POOL_MIN gates on n*k so PQ
 #: codebook fits and tiny corpora keep the zero-overhead single call;
 #: workers are env-tunable per deployment (a shared driver may want 1).
-import os as _os
-
 #: default also respects $SPARK_GRAFT_CPUS (the bench driver's core-count
 #: contract): a local[8] scaling run must not be flattered by a driver
 #: pool using cores Spark was not given.
-_LLOYD_POOL_WORKERS = int(
-    _os.environ.get(
-        "SPARK_GRAFT_LLOYD_THREADS",
-        str(
-            min(
-                8,
-                _os.cpu_count() or 1,
-                int(_os.environ.get("SPARK_GRAFT_CPUS", "32") or 32),
-            )
-        ),
-    )
+_LLOYD_POOL_WORKERS = env_int(
+    "SPARK_GRAFT_LLOYD_THREADS",
+    min(8, _os.cpu_count() or 1, env_int("SPARK_GRAFT_CPUS", 32)),
 )
 _LLOYD_POOL_MIN = 2_000_000
 _LLOYD_CHUNK = 8_192
@@ -210,7 +202,8 @@ def knn_matmul(
             right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
         )
     if not q_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int",
         )
@@ -504,7 +497,8 @@ def build_ivf(
     # without any repartition.
     assigned = chunks_df.withColumn("cluster_id", _assign(F.col(vec_col)))
     spark = chunks_df.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "cluster_id int, centroid array<double>",
     )
@@ -615,7 +609,8 @@ def ivf_search_pruned(
             spark.read.parquet(ivf_path).schema[doc_id_col]
             .dataType.simpleString()
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
             "score double, rank int",
@@ -745,7 +740,8 @@ def build_pq(
     # the vector payload costs more than the serial encode it parallelizes
     codes_df = chunks_df.withColumn("pq_code", _encode(F.col(vec_col)))
     spark = chunks_df.sparkSession
-    codebooks_df = spark.createDataFrame(
+    codebooks_df = local_frame(
+        spark,
         [
             (int(j), int(c), [float(v) for v in books[j, c]])
             for j in range(m)
@@ -881,8 +877,8 @@ def pq_search(
     qid_type = queries_df.schema[query_id_col].dataType.simpleString()
     did_type = codes_df.schema[doc_id_col].dataType.simpleString()
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int"
+        return local_frame(
+            spark, [], f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int"
         )
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
@@ -1011,7 +1007,8 @@ def build_sq8(
 
     codes_df = chunks_df.withColumn("sq_code", _encode(F.col(vec_col)))
     spark = chunks_df.sparkSession
-    params_df = spark.createDataFrame(
+    params_df = local_frame(
+        spark,
         [(int(d), float(vmin[d]), float(vmax[d])) for d in range(len(vmin))],
         "dim_idx int, vmin double, vmax double",
     )
@@ -1077,7 +1074,8 @@ def sq8_search(
     qid_type = queries_df.schema[query_id_col].dataType.simpleString()
     did_type = codes_df.schema[doc_id_col].dataType.simpleString()
     if not q_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
             "score double, rank int",
@@ -1340,7 +1338,8 @@ def lloyd_fixed_centroids(
     Returns centroids (cluster_id int, centroid array<double>).
     """
     centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "cluster_id int, centroid array<double>",
     )
@@ -1396,7 +1395,8 @@ def kmeans_summary_fixed(
     pure-codegen ``aggregate(zip_with)`` squared-distance agg as
     kmeans_summary — nothing row-sized to the driver."""
     centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    centroids = df.sparkSession.createDataFrame(
+    centroids = local_frame(
+        df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "cluster_id int, centroid array<double>",
     )
@@ -1445,7 +1445,8 @@ def build_ivf_fixed(
     similarity_ivf gate entry); :func:`build_ivf` remains the
     production path (sampled train, float32 BLAS assign)."""
     centers = _lloyd_fixed(chunks_df, vec_col, id_col, nlist, iters)
-    centroids = chunks_df.sparkSession.createDataFrame(
+    centroids = local_frame(
+        chunks_df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "cluster_id int, centroid array<double>",
     )
@@ -1501,7 +1502,8 @@ def build_pq_fixed(
         ),
     )
     spark = chunks_df.sparkSession
-    books_df = spark.createDataFrame(
+    books_df = local_frame(
+        spark,
         [
             (j, int(c), [float(x) for x in books[j][c]])
             for j in range(m)
@@ -1786,7 +1788,8 @@ def ivfpq_search(
     qid_type = queries_df.schema[query_id_col].dataType.simpleString()
     did_type = codes_df.schema[doc_id_col].dataType.simpleString()
     if not q_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{query_id_col} {qid_type}, {doc_id_col} {did_type},"
             " score double, rank int",
@@ -1824,8 +1827,8 @@ def ivfpq_search(
         probe_rows.extend(
             (qid, int(c_ids[ci]), float(qdotc[qi, ci])) for ci in top
         )
-    probe_df = spark.createDataFrame(
-        probe_rows, f"{query_id_col} {qid_type}, cluster_id int, _qdotc double"
+    probe_df = local_frame(
+        spark, probe_rows, f"{query_id_col} {qid_type}, cluster_id int, _qdotc double"
     )
     cand = F.broadcast(probe_df).join(
         codes_df.select(doc_id_col, "cluster_id", "pq_code"), "cluster_id"

@@ -24,6 +24,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from indexlab_spark.session import local_frame
+
 __all__ = [
     "merge_upsert",
     "compact_files",
@@ -876,7 +878,8 @@ def compact_groups(
         for f in sorted(os.listdir(in_path))
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     ]
-    listing = spark.createDataFrame(
+    listing = local_frame(
+        spark,
         [
             (f, os.path.getsize(os.path.join(in_path, f)))
             for f in names

@@ -77,7 +77,7 @@ def decode_image(content: bytes) -> np.ndarray:
        BMP; no third-party dependency.
     3. Unknown formats (JPEG etc. — a DCT codec is out of stdlib
        scope): a deterministic seeded 8x8x3 fake keeps the downstream
-       plumbing (resize/feature/dedup) testable with stable outputs.
+       plumbing (feature/dedup) testable with stable outputs.
     """
     try:
         from PIL import Image  # type: ignore
@@ -159,32 +159,6 @@ def with_image_features(
     return assets.mapInPandas(_extract, out_schema)
 
 
-def resize_images(
-    assets: DataFrame, width: int, height: int, content_col: str = "content"
-) -> DataFrame:
-    """Resize plumbing: decode -> resize -> re-encode, as mapInPandas.
-    Nearest-neighbor resampling over the decoded array (real pixels for
-    PNG/BMP via functions/imagecodec; the deterministic fake otherwise);
-    output is raw pixel bytes — swap the kernel for PIL's resampling
-    filters when installed."""
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for c in pdf[content_col]:
-                if c is None:
-                    out_rows.append(None)
-                    continue
-                img = decode_image(c)
-                ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                out_rows.append(img[np.ix_(ys, xs)].tobytes())
-            pdf = pdf.copy()
-            pdf[content_col] = out_rows
-            yield pdf
-
-    return assets.mapInPandas(_resize, assets.schema)
-
-
 def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
     """Decode an audio column value -> (samples int16 [n, channels],
     sample_rate).
@@ -237,30 +211,6 @@ def _audio_features(content: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
         out[half + int(z * (dim - half - 1))] += 1.0
     n = np.linalg.norm(out)
     return (out / n if n > 0 else out).astype(np.float32)
-
-
-def with_audio_features(
-    assets: DataFrame, content_col: str = "content", out_col: str = "embedding"
-) -> DataFrame:
-    """mapInPandas audio feature extraction — same batch shape and
-    output contract as with_image_features, so audio dedup/similarity
-    compose with operators/knn + operators/dedup unchanged."""
-    fields = [f"{f.name} {f.dataType.simpleString()}" for f in assets.schema.fields
-              if f.name != content_col]
-    out_schema = ", ".join(fields + [f"{out_col} array<float>"])
-    cols = [f.name for f in assets.schema.fields if f.name != content_col]
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _audio_features(c) if c is not None else None
-                for c in pdf[content_col]
-            ]
-            out = pdf[cols].copy()
-            out[out_col] = feats
-            yield out
-
-    return assets.mapInPandas(_extract, out_schema)
 
 
 def demux_avi_frames(content: bytes) -> list[tuple[bytes, bytes]]:

