@@ -40,8 +40,6 @@ _RINGS: dict[int, list] = {}
 # once the r16 LRU fix stopped the ring from (accidentally)
 # self-thrashing. On a real cluster with per-executor storage the
 # bound can be raised freely.
-import os as _os
-
 RING_MAX = env_int("SPARK_GRAFT_PIN_RING", 8, minimum=0)
 MAX_RINGS = 4
 
@@ -69,17 +67,11 @@ def pin(df: DataFrame, deser: bool = False) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    # env override for A/B experiments and deployments with storage
-    # headroom; default keeps the per-call choice above
-    forced = _os.environ.get("SPARK_GRAFT_PIN_STORAGE")
-    if forced:
-        level = getattr(StorageLevel, forced, StorageLevel.MEMORY_AND_DISK)
-    else:
-        level = (
-            StorageLevel.MEMORY_AND_DISK_DESER
-            if deser
-            else StorageLevel.MEMORY_AND_DISK
-        )
+    level = (
+        StorageLevel.MEMORY_AND_DISK_DESER
+        if deser
+        else StorageLevel.MEMORY_AND_DISK
+    )
     key = id(df.sparkSession)
     ring = _RINGS.setdefault(key, [])
     # r17: scan the ring BEFORE persisting — a same-semantics hit means

@@ -10,7 +10,9 @@ faiss_flat.py:5-23, faiss_ivf.py:5-31) become two Spark strategies:
   of the full ``n_queries × n_corpus`` cross product. At 100 TB the
   partial top-k is the difference between a terabyte shuffle and a
   megabyte one.
-- **ivf** (K3/K4): MLlib KMeans assigns a ``cluster_id``; search ranks
+- **ivf** (K3/K4): a seeded Lloyd fit on a bounded driver-side sample
+  (FAISS's train-on-subset contract) gives the centroids, and one
+  Arrow-batched pass assigns every vector its ``cluster_id``; search ranks
   centroids per query (tiny broadcast join), keeps ``nprobe`` cells and
   scans only those — Catalyst prunes the rest via the cluster_id join,
   the distributed analog of FAISS's inverted lists. Laying the chunks
@@ -39,36 +41,44 @@ from indexlab_spark.functions.vector import dot, l2_norm
 from indexlab_spark.session import env_int, local_frame
 
 
-def _rank_window(query_id_col: str, tie_col: str):
-    return Window.partitionBy(query_id_col).orderBy(
+def _keep_top(df: DataFrame, n: int, query_id_col: str, tie_col: str) -> DataFrame:
+    """``df`` + a 1-based ``rank`` per query (score desc, ``tie_col`` asc),
+    cut at ``n``."""
+    w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col(tie_col).asc()
     )
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= n)
 
 
 #: Driver-collect guard for the "queries are the small side by contract"
-#: paths (knn_matmul / pq_search / ivf_search_pruned). 250k rows x dim 64
-#: float64 is ~128 MB as Arrow/numpy buffers — and because the bounded
-#: fetch below goes through Arrow (toPandas), that estimate is what the
-#: driver actually holds, not 3-5x more in boxed Row objects. Beyond the
-#: bound those paths silently fall back to the fully-distributed
-#: knn_join_blocked instead of OOMing the driver.
+#: paths (knn_matmul / pq_search / sq8_search / ivfpq_search /
+#: ivf_search_pruned). 250k rows x dim 64 float64 is ~128 MB as
+#: Arrow/numpy buffers — and because the bounded fetch goes through Arrow
+#: (toPandas), that estimate is what the driver actually holds, not 3-5x
+#: more in boxed Row objects. Beyond the bound those paths fall back to
+#: the fully-distributed knn_join_blocked instead of OOMing the driver.
 MAX_COLLECT_QUERY_ROWS = 250_000
 
 #: Driver Lloyd assignment-step fan-out (r17). The sandbox's OpenBLAS is
 #: compiled MAX_THREADS=2, so one big sgemm uses at most 2 of the
 #: driver's cores; row-chunked assignment over a thread pool (BLAS drops
 #: the GIL) recovers the rest. _LLOYD_POOL_MIN gates on n*k so PQ
-#: codebook fits and tiny corpora keep the zero-overhead single call;
-#: workers are env-tunable per deployment (a shared driver may want 1).
-#: default also respects $SPARK_GRAFT_CPUS (the bench driver's core-count
+#: codebook fits and tiny corpora keep the zero-overhead single call.
+#: The pool respects $SPARK_GRAFT_CPUS (the bench driver's core-count
 #: contract): a local[8] scaling run must not be flattered by a driver
 #: pool using cores Spark was not given.
-_LLOYD_POOL_WORKERS = env_int(
-    "SPARK_GRAFT_LLOYD_THREADS",
-    min(8, _os.cpu_count() or 1, env_int("SPARK_GRAFT_CPUS", 32)),
-)
+_LLOYD_POOL_WORKERS = min(8, _os.cpu_count() or 1, env_int("SPARK_GRAFT_CPUS", 32))
 _LLOYD_POOL_MIN = 2_000_000
 _LLOYD_CHUNK = 8_192
+
+
+def _hits_schema(queries_df: DataFrame, docs_df: DataFrame,
+                 query_id_col: str, doc_id_col: str) -> str:
+    """``(query id, doc id, score double)`` DDL, each id typed as in its
+    frame."""
+    qid = queries_df.schema[query_id_col].dataType.simpleString()
+    did = docs_df.schema[doc_id_col].dataType.simpleString()
+    return f"{query_id_col} {qid}, {doc_id_col} {did}, score double"
 
 
 def _collect_bounded(df: DataFrame, cols: list[str], limit: int):
@@ -85,21 +95,93 @@ def _collect_bounded(df: DataFrame, cols: list[str], limit: int):
     return list(pdf.itertuples(index=False, name=None))
 
 
-def _normalized_queries(queries_df: DataFrame, query_vec_col: str) -> DataFrame:
-    """Spark-side l2 normalization (zero-norm rows pass through), for the
-    blocked fallback where the numpy normalization in knn_matmul never
-    runs."""
-    n = l2_norm(query_vec_col)
-    return (
-        queries_df.withColumn("_qn", n)
-        .withColumn(
-            query_vec_col,
-            F.when(
-                F.col("_qn") > 0,
-                F.transform(F.col(query_vec_col), lambda x: x / F.col("_qn")),
-            ).otherwise(F.col(query_vec_col)),
+def _query_batch(
+    spark, op: str, queries_df: DataFrame, docs_df: DataFrame, k: int,
+    max_collect_rows: int, query_id_col: str, query_vec_col: str,
+    doc_id_col: str, corpus_vec_col: str, normalize: bool = False,
+):
+    """The guarded small-side contract of the driver-collect searches.
+
+    Returns the query batch as ``(ids, float64 matrix)`` when it holds at
+    most ``max_collect_rows`` rows. Otherwise returns the finished answer
+    as a DataFrame: an empty batch gets the empty (query id, doc id,
+    score, rank) frame, and an over-bound batch runs the exact
+    distributed :func:`knn_join_blocked` over ``docs_df``'s raw vectors
+    (a recall superset of any approximate search; ``normalize``
+    l2-normalizes the queries Spark-side first) — or raises when
+    ``docs_df`` lacks them, rather than OOM the driver.
+    """
+    rows = _collect_bounded(
+        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    )
+    if rows is not None:
+        if not rows:
+            return local_frame(
+                spark, [],
+                _hits_schema(queries_df, docs_df, query_id_col, doc_id_col)
+                + ", rank int",
+            )
+        return (
+            np.array([r[0] for r in rows]),
+            np.array([r[1] for r in rows], dtype=np.float64),
         )
-        .drop("_qn")
+    if corpus_vec_col not in docs_df.columns:
+        raise ValueError(
+            f"{op}: query batch exceeds max_collect_rows={max_collect_rows}"
+            f" and the searched frame lacks '{corpus_vec_col}' for an exact"
+            " fallback; split the query batch or keep the raw vectors"
+            " alongside the codes"
+        )
+    if normalize:
+        n = l2_norm(query_vec_col)
+        queries_df = (
+            queries_df.withColumn("_qn", n)
+            .withColumn(
+                query_vec_col,
+                F.when(
+                    F.col("_qn") > 0,
+                    F.transform(F.col(query_vec_col), lambda x: x / F.col("_qn")),
+                ).otherwise(F.col(query_vec_col)),
+            )
+            .drop("_qn")
+        )
+    return knn_join_blocked(
+        queries_df, docs_df, k,
+        left_id_col=query_id_col, left_vec_col=query_vec_col,
+        right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
+    )
+
+
+def _pair_scores(
+    queries_df: DataFrame, corpus_df: DataFrame, metric: str,
+    query_id_col: str, query_vec_col: str, doc_id_col: str,
+    corpus_vec_col: str, extra: tuple = (),
+) -> DataFrame:
+    """Broadcast queries x corpus cross join -> (query id, doc id,
+    ``extra`` corpus columns, score). ``metric`` "ip" scores the inner
+    product, anything else cosine: norms are per-ROW quantities, so they
+    are materialized once per side BEFORE the cross join instead of
+    inside every pair (3 array-aggregates per pair -> 1), and d/(nq*nd)
+    runs in functions.vector.cosine's order, so results are bit-identical
+    to it."""
+    d = dot(F.col("_q." + query_vec_col), F.col("_c." + corpus_vec_col))
+    score = d
+    if metric != "ip":
+        queries_df = queries_df.withColumn("_qn", l2_norm(query_vec_col))
+        corpus_df = corpus_df.withColumn("_cn", l2_norm(corpus_vec_col))
+        score = F.when(
+            (F.col("_q._qn") > 0) & (F.col("_c._cn") > 0),
+            d / (F.col("_q._qn") * F.col("_c._cn")),
+        ).otherwise(F.lit(0.0))
+    return (
+        F.broadcast(queries_df.alias("_q"))
+        .crossJoin(corpus_df.alias("_c"))
+        .select(
+            F.col("_q." + query_id_col).alias(query_id_col),
+            F.col("_c." + doc_id_col).alias(doc_id_col),
+            *[F.col("_c." + c).alias(c) for c in extra],
+            score.alias("score"),
+        )
     )
 
 
@@ -124,35 +206,15 @@ def knn_join(
     Returns (query_id, doc_id, score double, rank int), rank 1-based.
     """
     tie_col = tie_col or doc_id_col
-    if metric == "ip":
-        score = dot(F.col("_q." + query_vec_col), F.col("_c." + corpus_vec_col))
-    else:
-        # cosine: norms are per-ROW quantities — materialize them once per
-        # side BEFORE the cross join instead of recomputing inside every
-        # pair (3 array-aggregates per pair -> 1). d/(nq*nd) in the same
-        # order as functions.vector.cosine, so results are bit-identical.
-        queries_df = queries_df.withColumn("_qn", l2_norm(query_vec_col))
-        corpus_df = corpus_df.withColumn("_cn", l2_norm(corpus_vec_col))
-        d = dot(F.col("_q." + query_vec_col), F.col("_c." + corpus_vec_col))
-        score = F.when(
-            (F.col("_q._qn") > 0) & (F.col("_c._cn") > 0),
-            d / (F.col("_q._qn") * F.col("_c._cn")),
-        ).otherwise(F.lit(0.0))
-    joined = (
-        F.broadcast(queries_df.alias("_q"))
-        .crossJoin(corpus_df.alias("_c"))
-        .select(
-            F.col("_q." + query_id_col).alias(query_id_col),
-            F.col("_c." + doc_id_col).alias(doc_id_col),
-            *([F.col("_c." + tie_col).alias(tie_col)] if tie_col != doc_id_col else []),
-            score.alias("score"),
-        )
+    extra = (tie_col,) if tie_col != doc_id_col else ()
+    out = _keep_top(
+        _pair_scores(
+            queries_df, corpus_df, metric, query_id_col, query_vec_col,
+            doc_id_col, corpus_vec_col, extra,
+        ),
+        k, query_id_col, tie_col,
     )
-    ranked = joined.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, tie_col))
-    )
-    out = ranked.filter(F.col("rank") <= k)
-    if tie_col != doc_id_col:
+    if extra:
         out = out.drop(tie_col)
     return out
 
@@ -185,76 +247,70 @@ def knn_matmul(
     Scale: no cross-join materialization, no full-corpus shuffle; the
     only shuffle is the candidate merge, O(n_partitions · n_q · k).
     """
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = corpus_df.schema[doc_id_col].dataType.simpleString()
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    got = _query_batch(
+        spark, "knn_matmul", queries_df, corpus_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
+        normalize=normalize_queries,
     )
-    if q_rows is None:
-        qdf = (
-            _normalized_queries(queries_df, query_vec_col)
-            if normalize_queries
-            else queries_df
-        )
-        return knn_join_blocked(
-            qdf, corpus_df, k,
-            left_id_col=query_id_col, left_vec_col=query_vec_col,
-            right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-        )
-    if not q_rows:
-        return local_frame(
-            spark,
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int",
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    if isinstance(got, DataFrame):
+        return got
+    q_ids, q_mat = got
     if normalize_queries:
         norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
         q_mat = q_mat / norms
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
+    from indexlab_spark.plans.colocate import fan_out
+
+    candidates = _scan_topk(
+        fan_out(corpus_df.select(doc_id_col, corpus_vec_col)), corpus_vec_col,
+        bc, _ip_scores, k, query_id_col, doc_id_col,
+        _hits_schema(queries_df, corpus_df, query_id_col, doc_id_col),
+    )
+    return _keep_top(candidates, k, query_id_col, doc_id_col)
+
+
+def _scan_topk(
+    docs: DataFrame, payload_col: str, bc, score_batch, k: int,
+    query_id_col: str, doc_id_col: str, schema: str,
+) -> DataFrame:
+    """First phase of the driver-collect searches: one Arrow pass over
+    ``docs`` (doc id + ``payload_col``) in which each batch's payload
+    becomes an (n_q, batch) score matrix ``score_batch(state, payload)``
+    against the broadcast ``bc = (query ids, state)``, and each batch
+    emits only its per-query top-k, best first. The shuffle then carries
+    ``batches x n_q x k`` candidate rows, never the cross product."""
+
     def _partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = bc.value
+        ids, state = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            emb = np.array(pdf[corpus_vec_col].tolist(), dtype=np.float64)
-            scores = qm @ emb.T  # (n_q, batch)
-            nb = scores.shape[1]
-            kk = min(k, nb)
+            scores = score_batch(state, pdf[payload_col])
+            kk = min(k, scores.shape[1])
             # argpartition then stable sort of the top slice per query —
             # all rows at once (take_along_axis), no per-query python
             # loop: the loop was the batch hot path once the matmul
             # itself went to BLAS (measured ~2x on the b2 bench shape)
             part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            top_scores = np.take_along_axis(scores, part, axis=1)
-            order = np.argsort(-top_scores, axis=1, kind="stable")
-            top_idx = np.take_along_axis(part, order, axis=1)
+            order = np.argsort(
+                -np.take_along_axis(scores, part, axis=1), axis=1, kind="stable"
+            )
+            top = np.take_along_axis(part, order, axis=1)
             yield pd.DataFrame(
                 {
                     query_id_col: np.repeat(ids, kk),
-                    doc_id_col: doc_ids[top_idx.ravel()],
-                    "score": np.take_along_axis(
-                        scores, top_idx, axis=1
-                    ).ravel(),
+                    doc_id_col: pdf[doc_id_col].to_numpy()[top.ravel()],
+                    "score": np.take_along_axis(scores, top, axis=1).ravel(),
                 }
             )
 
-    from indexlab_spark.plans.colocate import fan_out
+    return docs.mapInPandas(_partial_topk, schema)
 
-    candidates = fan_out(
-        corpus_df.select(doc_id_col, corpus_vec_col)
-    ).mapInPandas(
-        _partial_topk,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
-    )
-    ranked = candidates.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return ranked.filter(F.col("rank") <= k)
+
+def _ip_scores(q_mat: np.ndarray, vecs: pd.Series) -> np.ndarray:
+    return q_mat @ np.array(vecs.tolist(), dtype=np.float64).T
 
 
 def knn_join_blocked(
@@ -284,8 +340,6 @@ def knn_join_blocked(
     driver collect, no broadcast. For modest query sets prefer
     knn_matmul (zero replication).
     """
-    import pandas as pd
-
     lb = left.select(
         F.col(left_id_col).alias("_lid"), F.col(left_vec_col).alias("_lv")
     ).crossJoin(
@@ -321,16 +375,11 @@ def knn_join_blocked(
     cand = paired.select("_lid", "_lv", "_rid", "_rv").mapInPandas(
         _block_topk, f"_lid {lid_t}, _rid {rid_t}, score double"
     )
-    w = Window.partitionBy("_lid").orderBy(F.col("score").desc(), F.col("_rid").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_lid").alias(left_id_col),
-            F.col("_rid").alias(right_id_col),
-            "score",
-            "rank",
-        )
+    return _keep_top(cand, k, "_lid", "_rid").select(
+        F.col("_lid").alias(left_id_col),
+        F.col("_rid").alias(right_id_col),
+        "score",
+        "rank",
     )
 
 
@@ -443,6 +492,43 @@ def _sampled_train_matrix(
     return np.array(sample_df.toPandas()[vec_col].tolist(), dtype=np.float64)
 
 
+def _centroid_frame(spark, centers) -> DataFrame:
+    return local_frame(
+        spark,
+        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
+        "cluster_id int, centroid array<double>",
+    )
+
+
+def _load_centroids(centroids_df: DataFrame, op: str):
+    """(cluster ids int32, float64 centroid matrix) of a centroid frame,
+    in cluster_id order (nlist x dim — bounded by construction)."""
+    rows = centroids_df.orderBy("cluster_id").collect()
+    if not rows:
+        raise ValueError(f"{op}: empty centroid frame (no index state)")
+    return (
+        np.array([r["cluster_id"] for r in rows], dtype=np.int32),
+        np.array([r["centroid"] for r in rows], dtype=np.float64),
+    )
+
+
+def _assign_udf(centers: np.ndarray, ids: np.ndarray):
+    """Nearest-centroid ``ids`` entry as an Arrow UDF with the centroid
+    matrix in its closure: argmin ||x-c||^2 == argmin (||c||^2 - 2 x·c),
+    ||x||^2 being constant per row. ||c||^2 is taken in ``centers``' own
+    dtype, so a float32 fit and its float64 frame round-trip each keep
+    their exact arithmetic."""
+    c_t = centers.T.copy()
+    c2 = (centers * centers).sum(1)[None, :]
+
+    @F.pandas_udf("int")
+    def _assign(vecs: pd.Series) -> pd.Series:
+        x = np.array(vecs.tolist(), dtype=np.float64)
+        return pd.Series(ids[(c2 - 2.0 * (x @ c_t)).argmin(1)])
+
+    return _assign
+
+
 # ----------------------------------------------------------------- IVF (K3/K4)
 def build_ivf(
     chunks_df: DataFrame,
@@ -480,29 +566,15 @@ def build_ivf(
     rng = np.random.default_rng(seed)
     centers = _lloyd(train, min(nlist, len(train)), iters, rng)
 
-    c_t = centers.T.copy()
-    c2 = (centers * centers).sum(1)[None, :]
-
-    @F.pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        # argmin ||x-c||^2 == argmin (||c||^2 - 2 x·c); ||x||^2 constant per row
-        return pd.Series((c2 - 2.0 * (x @ c_t)).argmin(1).astype(np.int32))
-
+    assign = _assign_udf(centers, np.arange(len(centers), dtype=np.int32))
     # NO fan_out here (unlike knn_matmul): repartitioning the corpus for
     # the assign pass was measured net-negative — the shuffle of the full
     # vector payload costs more than the serial BLAS assign it would
     # parallelize (b6_ivf_build_large 5.1s -> 6.4s). On a real cluster
     # the corpus arrives in many splits and the assign pass is parallel
     # without any repartition.
-    assigned = chunks_df.withColumn("cluster_id", _assign(F.col(vec_col)))
-    spark = chunks_df.sparkSession
-    centroids = local_frame(
-        spark,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
-    return assigned, centroids
+    assigned = chunks_df.withColumn("cluster_id", assign(F.col(vec_col)))
+    return assigned, _centroid_frame(chunks_df.sparkSession, centers)
 
 
 def ivf_append(
@@ -533,23 +605,13 @@ def ivf_append(
     documents).
 
     Plan: centroids collect (nlist x dim — bounded by construction) and
-    broadcast in the UDF closure; the batch gets its cluster_id in one
-    Arrow-vectorized map pass. Nothing shuffles.
+    broadcast in the closure of build_ivf's assign UDF; the batch gets
+    its cluster_id in one Arrow-vectorized map pass. Nothing shuffles.
     """
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivf_append: empty centroid frame (no index state)")
-    ids = np.array([r["cluster_id"] for r in cents], dtype=np.int32)
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    c_t = centers.T.copy()
-    c2 = (centers * centers).sum(1)[None, :]
-
-    @F.pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(ids[(c2 - 2.0 * (x @ c_t)).argmin(1)])
-
-    return new_df.withColumn("cluster_id", _assign(F.col(vec_col)))
+    ids, centers = _load_centroids(centroids_df, "ivf_append")
+    return new_df.withColumn(
+        "cluster_id", _assign_udf(centers, ids)(F.col(vec_col))
+    )
 
 
 def write_ivf_partitioned(
@@ -592,38 +654,23 @@ def ivf_search_pruned(
     anyway, so pruning buys nothing) and run the exact distributed
     :func:`knn_join_blocked` over the full IVF table instead.
     """
-    import numpy as np
-
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    table = spark.read.parquet(ivf_path)
+    got = _query_batch(
+        spark, "ivf_search_pruned", queries_df, table, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        return knn_join_blocked(
-            queries_df, spark.read.parquet(ivf_path), k,
-            left_id_col=query_id_col, left_vec_col=query_vec_col,
-            right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-        )
-    if not q_rows:
-        qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-        did_type = (
-            spark.read.parquet(ivf_path).schema[doc_id_col]
-            .dataType.simpleString()
-        )
-        return local_frame(
-            spark,
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
-            "score double, rank int",
-        )
-    cents = centroids_df.collect()
-    c_ids = np.array([r["cluster_id"] for r in cents])
-    c_mat = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    if isinstance(got, DataFrame):
+        return got
+    _, q_mat = got
+    # centroids in cluster_id order, so the stable argsort breaks exact
+    # cell-score ties on cluster_id asc — ivf_search's cell window order;
+    # otherwise a tie could prune a cell that ivf_search then probes
+    c_ids, c_mat = _load_centroids(centroids_df, "ivf_search_pruned")
     scores = q_mat @ c_mat.T  # (n_q, nlist)
     order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
     probed_cells = sorted({int(c_ids[j]) for row in order for j in row})
 
-    chunks = spark.read.parquet(ivf_path).filter(
+    chunks = table.filter(
         F.col("cluster_id").isin(probed_cells)  # -> PartitionFilters
     )
     return ivf_search(
@@ -678,13 +725,138 @@ def ivf_search(
         doc_id_col,
         score.alias("score"),
     )
-    ranked = joined.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return ranked.filter(F.col("rank") <= k)
+    return _keep_top(joined, k, query_id_col, doc_id_col)
 
 
 # ------------------------------------------------------ PQ (scale extension)
+def _codebook_frame(spark, books) -> DataFrame:
+    return local_frame(
+        spark,
+        [
+            (j, c, [float(v) for v in centroid])
+            for j, book in enumerate(books)
+            for c, centroid in enumerate(book)
+        ],
+        "subspace int, code int, centroid array<double>",
+    )
+
+
+def _load_codebooks(codebooks_df: DataFrame, op: str) -> np.ndarray:
+    """(m, ksub, dsub) float64 codebooks of a codebook frame (m x 2^nbits
+    x dsub — bounded by construction; row order is irrelevant)."""
+    rows = codebooks_df.collect()
+    if not rows:
+        raise ValueError(f"{op}: empty codebook frame (no index state)")
+    books = np.zeros(
+        (
+            1 + max(r["subspace"] for r in rows),
+            1 + max(r["code"] for r in rows),
+            len(rows[0]["centroid"]),
+        )
+    )
+    for r in rows:
+        books[r["subspace"], r["code"]] = r["centroid"]
+    return books
+
+
+def _pq_encode_udf(books: np.ndarray):
+    """Per-subspace nearest-codebook-entry codes as an Arrow UDF with the
+    (m, ksub, dsub) codebooks in its closure (arithmetic in ``books``'
+    own dtype, as in :func:`_assign_udf`)."""
+    m, _, dsub = books.shape
+    b2 = (books * books).sum(2)  # (m, ksub)
+
+    @F.pandas_udf("array<int>")
+    def _encode(vecs: pd.Series) -> pd.Series:
+        x = np.array(vecs.tolist(), dtype=np.float64)  # (nb, dim)
+        codes = np.empty((len(x), m), dtype=np.int32)
+        for j in range(m):
+            xj = x[:, j * dsub : (j + 1) * dsub]
+            codes[:, j] = (b2[j][None, :] - 2.0 * (xj @ books[j].T)).argmin(1)
+        return pd.Series(list(codes))
+
+    return _encode
+
+
+def _adc_lut(q_mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup table LUT[q, j, c] = q_j · codebook[j][c], (n_q, m, ksub)."""
+    m, _, dsub = books.shape
+    return np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub), books)
+
+
+def _adc_scores(lut: np.ndarray, codes: pd.Series) -> np.ndarray:
+    """scores[q, b] = sum_j LUT[q, j, codes[b, j]]"""
+    codes = np.array(codes.tolist(), dtype=np.int64)  # (nb, m)
+    scores = np.zeros((len(lut), len(codes)))
+    for j in range(lut.shape[1]):
+        scores += lut[:, j, codes[:, j]]
+    return scores
+
+
+def _sq8_scale(vmin: np.ndarray, vmax: np.ndarray) -> np.ndarray:
+    # a constant dimension still needs a nonzero scale to round-trip
+    return np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
+
+
+def _load_sq8(params_df: DataFrame, op: str):
+    """(vmin, scale) of an SQ8 params frame (dim-sized by contract)."""
+    rows = params_df.orderBy("dim_idx").collect()
+    if not rows:
+        raise ValueError(f"{op}: empty params frame (no index state)")
+    vmin = np.array([r["vmin"] for r in rows], dtype=np.float64)
+    vmax = np.array([r["vmax"] for r in rows], dtype=np.float64)
+    return vmin, _sq8_scale(vmin, vmax)
+
+
+def _sq8_encode_udf(vmin: np.ndarray, scale: np.ndarray):
+    @F.pandas_udf("array<int>")
+    def _encode(vecs: pd.Series) -> pd.Series:
+        x = np.array(vecs.tolist(), dtype=np.float64)
+        codes = np.clip(
+            np.rint((x - vmin[None, :]) / scale[None, :]), 0, 255
+        ).astype(np.int32)
+        return pd.Series(list(codes))
+
+    return _encode
+
+
+def _sq8_scores(state, codes: pd.Series) -> np.ndarray:
+    """q · decode(code) = q · vmin + (q * scale) · code"""
+    w, c0 = state
+    return w @ np.array(codes.tolist(), dtype=np.float64).T + c0[:, None]
+
+
+def _refine(
+    cand: DataFrame, queries_df: DataFrame, codes_df: DataFrame, k: int,
+    rerank: int, round_to: int | None, query_id_col: str,
+    query_vec_col: str, doc_id_col: str, corpus_vec_col: str,
+) -> DataFrame:
+    """Second phase of the code searches: rank the approximate candidates
+    and keep the top ``k * rerank`` pool; when ``rerank`` > 0 and
+    ``codes_df`` still carries the raw vectors, re-score that pool
+    exactly (the standard PQ + refine recall recovery); rank 1..k.
+    ``round_to`` rounds both the approximate and the exact scores before
+    their windows (the knn_ip round-before-rank discipline)."""
+    if round_to is not None:
+        cand = cand.withColumn("score", F.round("score", round_to))
+    ranked = _keep_top(cand, k * max(rerank, 1), query_id_col, doc_id_col)
+    if not rerank or corpus_vec_col not in codes_df.columns:
+        return ranked.filter(F.col("rank") <= k)
+    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
+    if round_to is not None:
+        exact_sc = F.round(exact_sc, round_to)
+    exact = (
+        ranked.select(query_id_col, doc_id_col)
+        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
+        .join(
+            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
+            query_id_col,
+        )
+        .select(query_id_col, doc_id_col, exact_sc.alias("score"))
+    )
+    return _keep_top(exact, k, query_id_col, doc_id_col)
+
+
 def build_pq(
     chunks_df: DataFrame,
     m: int = 8,
@@ -725,31 +897,10 @@ def build_pq(
             for j in range(m)
         ]
     )  # (m, ksub, dsub)
-    b2 = (books * books).sum(2)  # (m, ksub)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)  # (nb, dim)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xj = x[:, j * dsub : (j + 1) * dsub]
-            codes[:, j] = (b2[j][None, :] - 2.0 * (xj @ books[j].T)).argmin(1)
-        return pd.Series(list(codes))
-
     # no fan_out: same measurement as build_ivf's assign pass — shuffling
     # the vector payload costs more than the serial encode it parallelizes
-    codes_df = chunks_df.withColumn("pq_code", _encode(F.col(vec_col)))
-    spark = chunks_df.sparkSession
-    codebooks_df = local_frame(
-        spark,
-        [
-            (int(j), int(c), [float(v) for v in books[j, c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "subspace int, code int, centroid array<double>",
-    )
-    return codes_df, codebooks_df
+    codes_df = chunks_df.withColumn("pq_code", _pq_encode_udf(books)(F.col(vec_col)))
+    return codes_df, _codebook_frame(chunks_df.sparkSession, books)
 
 
 def pq_append(
@@ -765,27 +916,8 @@ def pq_append(
     exactly the build pass's: append ≡ same-codebook re-encode (pinned
     in tests). No re-training — monitor drift and rebuild when the
     corpus outgrows the training sample, as with IVF."""
-    rows = codebooks_df.orderBy("subspace", "code").collect()
-    if not rows:
-        raise ValueError("pq_append: empty codebook frame (no index state)")
-    m = max(r["subspace"] for r in rows) + 1
-    ksub = max(r["code"] for r in rows) + 1
-    dsub = len(rows[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    b2 = (books * books).sum(2)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xj = x[:, j * dsub : (j + 1) * dsub]
-            codes[:, j] = (b2[j][None, :] - 2.0 * (xj @ books[j].T)).argmin(1)
-        return pd.Series(list(codes))
-
-    return new_df.withColumn("pq_code", _encode(F.col(vec_col)))
+    books = _load_codebooks(codebooks_df, "pq_append")
+    return new_df.withColumn("pq_code", _pq_encode_udf(books)(F.col(vec_col)))
 
 
 def sq8_append(
@@ -797,22 +929,8 @@ def sq8_append(
     [min, max] codec state (see :func:`pq_append`; out-of-range values
     saturate exactly as in the build pass, so drifted batches degrade
     gracefully rather than wrapping)."""
-    rows = params_df.orderBy("dim_idx").collect()
-    if not rows:
-        raise ValueError("sq8_append: empty params frame (no index state)")
-    vmin = np.array([r["vmin"] for r in rows], dtype=np.float64)
-    vmax = np.array([r["vmax"] for r in rows], dtype=np.float64)
-    scale = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        codes = np.clip(
-            np.rint((x - vmin[None, :]) / scale[None, :]), 0, 255
-        ).astype(np.int32)
-        return pd.Series(list(codes))
-
-    return new_df.withColumn("sq_code", _encode(F.col(vec_col)))
+    vmin, scale = _load_sq8(params_df, "sq8_append")
+    return new_df.withColumn("sq_code", _sq8_encode_udf(vmin, scale)(F.col(vec_col)))
 
 
 def pq_search(
@@ -850,99 +968,24 @@ def pq_search(
     pre-selects on raw scores, consistent by monotonicity). Default
     None keeps full-precision production ranking.
     """
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    got = _query_batch(
+        spark, "pq_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            f"pq_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' for "
-            "an exact fallback; split the query batch or keep the raw "
-            "vectors alongside the codes"
-        )
-    cb = codebooks_df.collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    ksub = 1 + max(r["code"] for r in cb)
-    dsub = len(cb[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return local_frame(
-            spark, [], f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # LUT: (n_q, m, ksub) — q_j · book_{j,c}
-    lut = np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub), books)
-    bc = spark.sparkContext.broadcast((q_ids, lut))
-    pool = max(k * rerank, k) if rerank else k
-
-    def _adc_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, lut_ = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)  # (nb, m)
-            # scores[q, b] = sum_j LUT[q, j, codes[b, j]]
-            scores = np.zeros((nq, len(codes)))
-            for j in range(lut_.shape[1]):
-                scores += lut_[:, j, codes[:, j]]
-            kk = min(pool, scores.shape[1])
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            out_q, out_d, out_s = [], [], []
-            for qi in range(nq):
-                idx = part[qi]
-                order = idx[np.argsort(-scores[qi, idx], kind="stable")]
-                out_q.extend([ids[qi]] * len(order))
-                out_d.extend(doc_ids[order])
-                out_s.extend(scores[qi, order])
-            yield pd.DataFrame(
-                {query_id_col: out_q, doc_id_col: out_d, "score": out_s}
-            )
-
-    cand = codes_df.select(doc_id_col, "pq_code").mapInPandas(
-        _adc_topk, f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double"
+    if isinstance(got, DataFrame):
+        return got
+    q_ids, q_mat = got
+    books = _load_codebooks(codebooks_df, "pq_search")
+    bc = spark.sparkContext.broadcast((q_ids, _adc_lut(q_mat, books)))
+    cand = _scan_topk(
+        codes_df.select(doc_id_col, "pq_code"), "pq_code", bc, _adc_scores,
+        k * max(rerank, 1), query_id_col, doc_id_col,
+        _hits_schema(queries_df, codes_df, query_id_col, doc_id_col),
     )
-    if round_to is not None:
-        cand = cand.withColumn("score", F.round("score", round_to))
-    ranked = cand.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    # exact refine on the rerank*k survivors only
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _refine(
+        cand, queries_df, codes_df, k, rerank, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)
 
 
 def build_sq8(
@@ -994,18 +1037,8 @@ def build_sq8(
         train = _sampled_train_matrix(chunks_df, vec_col, sample_rows, seed)
         vmin = train.min(0)
         vmax = train.max(0)
-    # a constant dimension still needs a nonzero scale to round-trip
-    scale = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        codes = np.clip(
-            np.rint((x - vmin[None, :]) / scale[None, :]), 0, 255
-        ).astype(np.int32)
-        return pd.Series(list(codes))
-
-    codes_df = chunks_df.withColumn("sq_code", _encode(F.col(vec_col)))
+    encode = _sq8_encode_udf(vmin, _sq8_scale(vmin, vmax))
+    codes_df = chunks_df.withColumn("sq_code", encode(F.col(vec_col)))
     spark = chunks_df.sparkSession
     params_df = local_frame(
         spark,
@@ -1047,99 +1080,26 @@ def sq8_search(
     monotonicity (a strictly larger raw score never rounds smaller).
     Default None keeps full-precision production ranking.
     """
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    got = _query_batch(
+        spark, "sq8_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            f"sq8_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' for "
-            "an exact fallback; split the query batch or keep the raw "
-            "vectors alongside the codes"
-        )
-    prow = params_df.orderBy("dim_idx").collect()  # dim-sized by contract
-    vmin = np.array([r["vmin"] for r in prow])
-    scale = np.where(
-        np.array([r["vmax"] for r in prow]) > vmin,
-        (np.array([r["vmax"] for r in prow]) - vmin) / 255.0,
-        1.0,
+    if isinstance(got, DataFrame):
+        return got
+    q_ids, q_mat = got
+    vmin, scale = _load_sq8(params_df, "sq8_search")
+    bc = spark.sparkContext.broadcast(
+        (q_ids, (q_mat * scale[None, :], q_mat @ vmin))
     )
-
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return local_frame(
-            spark,
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
-            "score double, rank int",
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    w = q_mat * scale[None, :]          # (nq, dim)
-    c0 = q_mat @ vmin                   # (nq,)
-    bc = spark.sparkContext.broadcast((q_ids, w, c0))
-    pool = max(k * rerank, k) if rerank else k
-
-    def _sq_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, w_, c0_ = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array(pdf["sq_code"].tolist(), dtype=np.float64)
-            scores = w_ @ codes.T + c0_[:, None]    # (nq, nb)
-            kk = min(pool, scores.shape[1])
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            out_q, out_d, out_s = [], [], []
-            for qi in range(nq):
-                idx = part[qi]
-                order = idx[np.argsort(-scores[qi, idx], kind="stable")]
-                out_q.extend([ids[qi]] * len(order))
-                out_d.extend(doc_ids[order])
-                out_s.extend(scores[qi, order])
-            yield pd.DataFrame(
-                {query_id_col: out_q, doc_id_col: out_d, "score": out_s}
-            )
-
-    cand = codes_df.select(doc_id_col, "sq_code").mapInPandas(
-        _sq_topk,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
+    cand = _scan_topk(
+        codes_df.select(doc_id_col, "sq_code"), "sq_code", bc, _sq8_scores,
+        k * max(rerank, 1), query_id_col, doc_id_col,
+        _hits_schema(queries_df, codes_df, query_id_col, doc_id_col),
     )
-    if round_to is not None:
-        cand = cand.withColumn("score", F.round("score", round_to))
-    ranked = cand.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _refine(
+        cand, queries_df, codes_df, k, rerank, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)
 
 
 def knn_graph(
@@ -1186,13 +1146,11 @@ def knn_graph(
     nn = knn_join_blocked(
         left, right, k + 1 + rounding_slack, right_blocks=right_blocks
     )
-    nn = (
-        nn.filter(F.col("query_id") != F.col("doc_id"))
-        .withColumn("score", F.round("score", 6))
-        .withColumn(
-            "rank2", F.row_number().over(_rank_window("query_id", "doc_id"))
-        )
-        .filter(F.col("rank2") <= k)
+    nn = _keep_top(
+        nn.filter(F.col("query_id") != F.col("doc_id")).withColumn(
+            "score", F.round("score", 6)
+        ),
+        k, "query_id", "doc_id",
     )
     edges = (
         nn.select(
@@ -1206,6 +1164,42 @@ def knn_graph(
     if mutual:
         edges = edges.filter(F.col("n_directions") == 2)
     return edges
+
+
+def _cluster_summary(
+    assigned: DataFrame, centroids: DataFrame, vec_col: str
+) -> DataFrame:
+    """One row per non-empty cluster — cluster_id, n, inertia (sum of
+    squared L2 distances to the centroid, 6dp), centroid_norm (6dp) — as
+    ONE map-combined agg whose squared distance is a pure-codegen
+    ``aggregate(zip_with(...))`` against the row's centroid, joined from
+    the k-row broadcast centroid frame."""
+    sq = F.aggregate(
+        F.zip_with(
+            F.col(vec_col).cast("array<double>"),
+            F.col("centroid"),
+            lambda x, c: (x - c) * (x - c),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    norm = F.sqrt(
+        F.aggregate(
+            F.col("centroid"),
+            F.lit(0.0),
+            lambda acc, v: acc + v * v,
+        )
+    )
+    return (
+        assigned.join(F.broadcast(centroids), "cluster_id")
+        .select("cluster_id", sq.alias("_sq"), norm.alias("_nm"))
+        .groupBy("cluster_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("_sq"), 6).alias("inertia"),
+            F.round(F.first("_nm"), 6).alias("centroid_norm"),
+        )
+    )
 
 
 def kmeans_summary(
@@ -1246,36 +1240,7 @@ def kmeans_summary(
         max_points_per_centroid=max_points_per_centroid,
         iters=iters,
     )
-    sq = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("centroid"),
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("centroid"),
-            F.lit(0.0),
-            lambda acc, v: acc + v * v,
-        )
-    )
-    return (
-        assigned.join(F.broadcast(centroids), "cluster_id")
-        .select(
-            "cluster_id",
-            sq.alias("_sq"),
-            norm.alias("_nm"),
-        )
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("_sq"), 6).alias("inertia"),
-            F.round(F.first("_nm"), 6).alias("centroid_norm"),
-        )
-    )
+    return _cluster_summary(assigned, centroids, vec_col)
 
 
 def _argmin_cluster(vec_col, centers: "np.ndarray"):
@@ -1338,11 +1303,7 @@ def lloyd_fixed_centroids(
     Returns centroids (cluster_id int, centroid array<double>).
     """
     centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    return local_frame(
-        df.sparkSession,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
+    return _centroid_frame(df.sparkSession, centers)
 
 
 def _lloyd_fixed(
@@ -1395,37 +1356,9 @@ def kmeans_summary_fixed(
     pure-codegen ``aggregate(zip_with)`` squared-distance agg as
     kmeans_summary — nothing row-sized to the driver."""
     centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    centroids = local_frame(
-        df.sparkSession,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
     assigned = df.withColumn("cluster_id", _argmin_cluster(vec_col, centers))
-    sq = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("centroid"),
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("centroid"),
-            F.lit(0.0),
-            lambda acc, v: acc + v * v,
-        )
-    )
-    return (
-        assigned.join(F.broadcast(centroids), "cluster_id")
-        .select("cluster_id", sq.alias("_sq"), norm.alias("_nm"))
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("_sq"), 6).alias("inertia"),
-            F.round(F.first("_nm"), 6).alias("centroid_norm"),
-        )
+    return _cluster_summary(
+        assigned, _centroid_frame(df.sparkSession, centers), vec_col
     )
 
 
@@ -1445,15 +1378,10 @@ def build_ivf_fixed(
     similarity_ivf gate entry); :func:`build_ivf` remains the
     production path (sampled train, float32 BLAS assign)."""
     centers = _lloyd_fixed(chunks_df, vec_col, id_col, nlist, iters)
-    centroids = local_frame(
-        chunks_df.sparkSession,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
     assigned = chunks_df.withColumn(
         "cluster_id", _argmin_cluster(vec_col, centers)
     )
-    return assigned, centroids
+    return assigned, _centroid_frame(chunks_df.sparkSession, centers)
 
 
 def build_pq_fixed(
@@ -1501,17 +1429,7 @@ def build_pq_fixed(
             ]
         ),
     )
-    spark = chunks_df.sparkSession
-    books_df = local_frame(
-        spark,
-        [
-            (j, int(c), [float(x) for x in books[j][c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "subspace int, code int, centroid array<double>",
-    )
-    return codes_df, books_df
+    return codes_df, _codebook_frame(chunks_df.sparkSession, books)
 
 
 def ivf_append_fixed(
@@ -1527,15 +1445,12 @@ def ivf_append_fixed(
     formulas must match exactly). Same contract: given the same
     centroid frame, a vector gets the same cluster_id whether it
     arrives in the build or any later append."""
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivf_append_fixed: empty centroid frame")
-    if [r["cluster_id"] for r in cents] != list(range(len(cents))):
+    ids, centers = _load_centroids(centroids_df, "ivf_append_fixed")
+    if ids.tolist() != list(range(len(ids))):
         raise ValueError(
             "ivf_append_fixed: centroid ids must be dense 0..k-1 "
             "(a build_ivf_fixed frame); use ivf_append for arbitrary ids"
         )
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
     return new_df.withColumn("cluster_id", _argmin_cluster(vec_col, centers))
 
 
@@ -1588,35 +1503,14 @@ def hard_negatives(
         .first()
     )
     pool = k + int(max_pos_row[0] or 0) + extra_pool
-    q, c = queries_df, corpus_df
-    if metric == "cos":
-        q = q.withColumn("_qn", l2_norm(query_vec_col))
-        c = c.withColumn("_cn", l2_norm(corpus_vec_col))
-        d = dot(F.col("_q." + query_vec_col), F.col("_c." + corpus_vec_col))
-        score = F.when(
-            (F.col("_q._qn") > 0) & (F.col("_c._cn") > 0),
-            d / (F.col("_q._qn") * F.col("_c._cn")),
-        ).otherwise(F.lit(0.0))
-    else:
-        score = dot(F.col("_q." + query_vec_col), F.col("_c." + corpus_vec_col))
-    scored = (
-        F.broadcast(q.alias("_q"))
-        .crossJoin(c.alias("_c"))
-        .select(
-            F.col("_q." + query_id_col).alias(query_id_col),
-            F.col("_c." + doc_id_col).alias(doc_id_col),
-            F.round(score, 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.asc(doc_id_col)
-    )
-    pooled = scored.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= pool
-    )
+    scored = _pair_scores(
+        queries_df, corpus_df, metric, query_id_col, query_vec_col,
+        doc_id_col, corpus_vec_col,
+    ).withColumn("score", F.round("score", 6))
+    pooled = _keep_top(scored, pool, query_id_col, doc_id_col)
     pos = positives.select(query_id_col, doc_id_col).distinct()
     neg = pooled.join(pos, [query_id_col, doc_id_col], "left_anti")
-    w2 = Window.partitionBy(query_id_col).orderBy("_rk")
+    w2 = Window.partitionBy(query_id_col).orderBy("rank")
     return (
         neg.withColumn("hard_rank", F.row_number().over(w2).cast("int"))
         .filter(F.col("hard_rank") <= k)
@@ -1770,45 +1664,17 @@ def ivfpq_search(
     """
     if nprobe < 1:
         raise ValueError(f"ivfpq_search: nprobe >= 1, got {nprobe}")
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    got = _query_batch(
+        spark, "ivfpq_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            "ivfpq_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' "
-            "for an exact fallback"
-        )
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return local_frame(
-            spark,
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type},"
-            " score double, rank int",
-        )
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivfpq_search: empty centroid frame")
-    c_ids = np.array([r["cluster_id"] for r in cents])
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    cb = codebooks_df.collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    ksub = 1 + max(r["code"] for r in cb)
-    dsub = len(cb[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
+    if isinstance(got, DataFrame):
+        return got
+    q_ids, q_mat = got
+    q_ids = q_ids.tolist()
+    c_ids, centers = _load_centroids(centroids_df, "ivfpq_search")
+    books = _load_codebooks(codebooks_df, "ivfpq_search")
 
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
     qdotc = q_mat @ centers.T  # (nq, nlist)
     npb = min(nprobe, len(c_ids))
     probe_rows = []
@@ -1827,18 +1693,16 @@ def ivfpq_search(
         probe_rows.extend(
             (qid, int(c_ids[ci]), float(qdotc[qi, ci])) for ci in top
         )
+    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
     probe_df = local_frame(
         spark, probe_rows, f"{query_id_col} {qid_type}, cluster_id int, _qdotc double"
     )
     cand = F.broadcast(probe_df).join(
         codes_df.select(doc_id_col, "cluster_id", "pq_code"), "cluster_id"
     )
-    lut = np.einsum(
-        "qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub), books
-    )
     idx_map = {qid: i for i, qid in enumerate(q_ids)}
-    bc = spark.sparkContext.broadcast((idx_map, lut))
-    pool = max(k * rerank, k) if rerank else k
+    bc = spark.sparkContext.broadcast((idx_map, _adc_lut(q_mat, books)))
+    pool = k * max(rerank, 1)
 
     def _adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         imap, lut_ = bc.value
@@ -1863,33 +1727,9 @@ def ivfpq_search(
             ).groupby(query_id_col, sort=False).head(pool)
 
     scored = cand.mapInPandas(
-        _adc,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
+        _adc, _hits_schema(queries_df, codes_df, query_id_col, doc_id_col)
     )
-    if round_to is not None:
-        scored = scored.withColumn("score", F.round("score", round_to))
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _refine(
+        scored, queries_df, codes_df, k, rerank, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)

@@ -39,10 +39,12 @@ def test_env_int_reads_valid_values(monkeypatch):
 
 @pytest.mark.parametrize("value", ["", "lots"])
 def test_lloyd_threads_env_does_not_break_knn_import(value):
+    """The knn import sizes its Lloyd thread pool from SPARK_GRAFT_CPUS;
+    an invalid value falls back to the 32-core default."""
     got = _run(
         "import os; from indexlab_spark.operators import knn;"
-        " print(knn._LLOYD_POOL_WORKERS == min(8, os.cpu_count() or 1, 4))",
-        SPARK_GRAFT_LLOYD_THREADS=value, SPARK_GRAFT_CPUS="4",
+        " print(knn._LLOYD_POOL_WORKERS == min(8, os.cpu_count() or 1, 32))",
+        SPARK_GRAFT_CPUS=value,
     )
     assert got == "True"
 

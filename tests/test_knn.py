@@ -819,3 +819,118 @@ def test_build_ivfpq_fixed_deterministic_and_searchable(spark, emb, queries):
         # nprobe == nlist probes everything; exact rerank must put the
         # query's own vector (ip with itself) at rank 1
         assert hits[[h[0] for h in hits].index(1)][1] == qid
+
+
+def test_ivf_pruned_exact_centroid_tie_matches_ivf_search(spark, tmp_path):
+    """Two identical centroids tie exactly on every query's cell score.
+    ivf_search probes the lower cluster_id; the partition pre-filter of
+    ivf_search_pruned must keep that same cell even when the centroid
+    frame lists the higher id first."""
+    from indexlab_spark.operators.knn import (
+        ivf_search_pruned, write_ivf_partitioned,
+    )
+
+    a, b = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    centroids = spark.createDataFrame(
+        [(1, a), (0, a), (2, b)], "cluster_id int, centroid array<double>"
+    )
+    docs = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0, 0.0], 0) for i in range(4)]
+        + [(10 + i, [0.9, 0.0, 0.1 * i, 0.0], 1) for i in range(4)]
+        + [(20 + i, [0.0, 1.0, 0.1 * i, 0.0], 2) for i in range(4)],
+        "doc_id long, embedding array<double>, cluster_id int",
+    )
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.05, 0.05, 0.0]), (1, [0.5, 0.0, 0.5, 0.0])],
+        "query_id long, qvec array<double>",
+    )
+    path = str(tmp_path / "ivf_tie")
+    write_ivf_partitioned(docs, path)
+    got = ivf_search_pruned(spark, queries, path, centroids, 3, nprobe=1)
+    exp = ivf_search(queries, docs, centroids, 3, nprobe=1)
+    rows = sorted(map(tuple, exp.collect()))
+    assert rows and {r[1] for r in rows} <= {0, 1, 2, 3}
+    assert sorted(map(tuple, got.collect())) == rows
+
+
+def _collect_query_matrix(queries):
+    pdf = queries.orderBy("query_id").toPandas()
+    return pdf["query_id"].tolist(), np.array(pdf["qvec"].tolist(), dtype=np.float64)
+
+
+def _ranked_topk(qids, doc_ids, scores, k):
+    """{query id: [(doc_id, score)]} ranked score desc, then doc_id asc."""
+    out = {}
+    for qi, qid in enumerate(qids):
+        order = sorted(range(len(doc_ids)), key=lambda j: (-scores[qi, j], doc_ids[j]))
+        out[qid] = [(int(doc_ids[j]), scores[qi, j]) for j in order[:k]]
+    return out
+
+
+def _assert_first_phase(out, truth, tol):
+    got = {}
+    for r in out.collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], int(r["doc_id"]), r["score"]))
+    assert set(got) == set(truth)
+    for qid, hits in got.items():
+        hits.sort()
+        assert [h[0] for h in hits] == list(range(1, K + 1))
+        assert [h[1] for h in hits] == [d for d, _ in truth[qid]], f"q{qid} ids"
+        for (_, did, s), (_, es) in zip(hits, truth[qid]):
+            assert abs(s - es) <= tol, f"q{qid} doc {did}"
+
+
+def test_pq_sq8_first_phase_equals_numpy_topk(spark, emb, queries):
+    """rerank=0 returns the approximate first phase itself: the per-batch
+    partial top-k plus the merge window must equal a brute-force top-k
+    over the codec scores (ADC for PQ, q·vmin + (q*scale)·code for SQ8),
+    ranked score desc, then doc_id asc."""
+    from indexlab_spark.operators.knn import build_pq, build_sq8, pq_search, sq8_search
+
+    corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
+    qids, q = _collect_query_matrix(queries)
+
+    codes_df, books_df = build_pq(corpus, m=8, nbits=6, seed=42)
+    books = np.zeros((8, 64, 8))
+    for r in books_df.collect():
+        books[r["subspace"], r["code"]] = r["centroid"]
+    pdf = codes_df.select("doc_id", "pq_code").toPandas()
+    doc_ids = pdf["doc_id"].to_numpy()
+    codes = np.array(pdf["pq_code"].tolist())
+    lut = np.einsum("qjd,jcd->qjc", q.reshape(len(q), 8, 8), books)
+    adc = sum(lut[:, j, codes[:, j]] for j in range(8))
+    _assert_first_phase(
+        pq_search(spark, queries, codes_df, books_df, K, rerank=0),
+        _ranked_topk(qids, doc_ids, adc, K),
+        tol=0.0,  # same driver LUT, same j-order sum
+    )
+
+    codes_df, params_df = build_sq8(corpus, seed=42)
+    params = params_df.orderBy("dim_idx").toPandas()
+    vmin = params["vmin"].to_numpy()
+    vmax = params["vmax"].to_numpy()
+    scale = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
+    pdf = codes_df.select("doc_id", "sq_code").toPandas()
+    doc_ids = pdf["doc_id"].to_numpy()
+    codes = np.array(pdf["sq_code"].tolist(), dtype=np.float64)
+    sq = (q @ vmin)[:, None] + (q * scale) @ codes.T
+    _assert_first_phase(
+        sq8_search(spark, queries, codes_df, params_df, K, rerank=0),
+        _ranked_topk(qids, doc_ids, sq, K),
+        tol=1e-9,  # BLAS may block the per-batch matmul differently
+    )
+
+
+def test_pq_search_empty_codebooks_raises_like_pq_append(spark, emb, queries):
+    from indexlab_spark.operators.knn import build_pq, pq_append, pq_search
+
+    corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
+    codes_df, _ = build_pq(corpus, m=8, nbits=4, seed=42)
+    empty = spark.createDataFrame(
+        [], "subspace int, code int, centroid array<double>"
+    )
+    msg = r"empty codebook frame \(no index state\)"
+    with pytest.raises(ValueError, match="pq_append: " + msg):
+        pq_append(corpus, empty)
+    with pytest.raises(ValueError, match="pq_search: " + msg):
+        pq_search(spark, queries, codes_df, empty, K)
