@@ -9,6 +9,9 @@ interpolation semantics differ).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -497,6 +500,37 @@ def sketch_union_estimate(
     )
 
 
+def _quantile_edges(
+    df: "DataFrame", cols: list[str], n: int, empty_msg: str
+) -> list[list[float]]:
+    """Exact interpolated quantile edges at i/n (i = 1..n-1) of each SQL
+    expression in ``cols``, all from ONE aggregate over ``df`` (exact
+    `percentile`, so the oracle's quantile_cont interpolates
+    identically) and returned as driver literals. Raises
+    ``ValueError(empty_msg)`` when any expression has no non-null
+    value (no edges to bucket against)."""
+    qs = ", ".join(str(i / n) for i in range(1, n))
+    row = df.agg(
+        *[F.expr(f"percentile({c}, array({qs}))") for c in cols]
+    ).first()
+    if any(e is None for e in row):
+        raise ValueError(empty_msg)
+    return [[float(x) for x in e] for e in row]
+
+
+def _bucket_index(col: "Column", edges: list) -> "Column":
+    """Number of ``edges`` (ascending; floats or Columns) strictly below
+    ``col`` — the bucket every quantile-edge operator assigns, 0 ..
+    len(edges); a NULL value (or NULL edge) counts as not below, so
+    NULL lands in bucket 0. A flat sum of codegen compares whose size
+    is the edge count alone."""
+    return reduce(
+        operator.add,
+        [F.when(col > e, 1).otherwise(0) for e in edges],
+        F.lit(0),
+    )
+
+
 def psi_drift(
     old: "DataFrame",
     new: "DataFrame",
@@ -524,18 +558,13 @@ def psi_drift(
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = old.agg(
-        F.expr(
-            f"percentile({value_col}, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    if edges_row["e"] is None:
-        raise ValueError(
-            "psi_drift: the OLD snapshot has no non-null values — no "
-            "bucket edges to compare against"
-        )
-    edges = [float(x) for x in edges_row["e"]]
+    [edges] = _quantile_edges(
+        old,
+        [value_col],
+        n_buckets,
+        "psi_drift: the OLD snapshot has no non-null values — no "
+        "bucket edges to compare against",
+    )
     return _psi_table(
         old.sparkSession,
         edges,
@@ -555,11 +584,8 @@ def psi_bucket_counts(
     (frozen reference edges, counts are LINEAR so per-batch partitions
     sum). Bucket = number of edges strictly below the value; NULLs
     land in bucket 0 (the psi_drift contract)."""
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col(value_col) > F.lit(e), F.lit(i + 1)).otherwise(b)
     return (
-        df.select(b.alias("bucket"))
+        df.select(_bucket_index(F.col(value_col), edges).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
@@ -635,17 +661,12 @@ def psi_reference(
     performs."""
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = df.agg(
-        F.expr(
-            f"percentile({value_col}, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    if edges_row is None or edges_row["e"] is None:
-        raise ValueError(
-            "psi_reference: no non-null values in the reference snapshot"
-        )
-    edges = [float(x) for x in edges_row["e"]]
+    [edges] = _quantile_edges(
+        df,
+        [value_col],
+        n_buckets,
+        "psi_reference: no non-null values in the reference snapshot",
+    )
     counts = {
         int(r["bucket"]): int(r["_n"])
         for r in psi_bucket_counts(df, value_col, edges).collect()
@@ -1221,70 +1242,25 @@ def ks_drift(
     classical null quantiles available for thresholding).
 
     The scalable part is the global cumulative sum the CDFs need:
-    NEVER a single-partition window over the data. The per-value count
-    frame (distinct values x 2 counts — the only data-sized frame) is
-    range-bucketed by driver-literal quantile edges, cumsummed with a
-    window over each bucket shard (parallel, bounded), and the
-    per-bucket totals (n_buckets rows) are offset-cumsummed and
-    broadcast back — the same two-level pattern as
-    curation.token_budget_mix. The sup and its location come from one
-    max(struct) aggregate.
+    NEVER a single-partition window over the data. One map-combined
+    count over the tagged union of both snapshots gives the per-value
+    frame (distinct values x 2 counts — the only data-sized frame);
+    the shared :func:`_cum_counts` engine cumsums it in bucket shards
+    (parallel, bounded) stitched by an n_buckets-row offset frame —
+    the same two-level pattern as curation.token_budget_mix. The sup
+    and its location come from one max(struct) aggregate.
 
     Output: one row — ks_stat (6dp), at_value (the smallest value
     achieving the sup), n_old, n_new.
     """
-    def side(df, name):
-        return (
-            df.select(F.col(value_col).cast("double").alias("v"))
-            .filter(F.col("v").isNotNull())
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    counts = (
-        side(old, "c_old")
-        .join(side(new, "c_new"), "v", "full_outer")
-        .na.fill({"c_old": 0, "c_new": 0})
-    )
-    tot = counts.agg(
-        F.sum("c_old").alias("n_old"), F.sum("c_new").alias("n_new")
-    ).first()
-    n_old, n_new = int(tot["n_old"] or 0), int(tot["n_new"] or 0)
+    counts = _two_sample_counts(_tag_sides(old, new, value_col), 0, 1)
+    n_old, n_new = _side_totals(counts)
     if n_old == 0 or n_new == 0:
         raise ValueError("ks_drift: both snapshots need non-null values")
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = counts.agg(
-        F.expr(
-            f"percentile(v, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    edges = sorted({float(x) for x in edges_row["e"]})
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col("v") > F.lit(e), F.lit(i + 1)).otherwise(b)
-    bucketed = counts.withColumn("bucket", b)
-    w = Window.partitionBy("bucket").orderBy("v")
-    cum = bucketed.select(
-        "bucket", "v",
-        F.sum("c_old").over(w).alias("cum_old"),
-        F.sum("c_new").over(w).alias("cum_new"),
+    diff = F.col("cum_a") / F.lit(float(n_old)) - F.col("cum_b") / F.lit(
+        float(n_new)
     )
-    btot = bucketed.groupBy("bucket").agg(
-        F.sum("c_old").alias("bo"), F.sum("c_new").alias("bn")
-    )
-    bw = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # single-partition window over <= n_buckets rows — bounded
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bo").over(bw), F.lit(0)).alias("off_old"),
-        F.coalesce(F.sum("bn").over(bw), F.lit(0)).alias("off_new"),
-    )
-    diff = (
-        (F.col("off_old") + F.col("cum_old")) / F.lit(float(n_old))
-        - (F.col("off_new") + F.col("cum_new")) / F.lit(float(n_new))
-    )
-    best = cum.join(F.broadcast(offsets), "bucket").select(
+    best = _cum_counts(counts, n_buckets).select(
         F.abs(diff).alias("d"), "v"
     ).agg(
         F.max(F.struct(F.col("d"), (-F.col("v")).alias("nv"))).alias("m")
@@ -1561,28 +1537,24 @@ def rfm_segments(
         "recency_days",
         F.datediff(F.lit(anchor).cast("date"), F.col("last_order")),
     )
-    qs = [i / n_tiles for i in range(1, n_tiles)]
-    qlist = ", ".join(str(q) for q in qs)
-    edges_row = per_cust.agg(
-        F.expr(f"percentile(-recency_days, array({qlist}))").alias("r"),
-        F.expr(f"percentile(frequency, array({qlist}))").alias("f"),
-        F.expr(f"percentile(monetary, array({qlist}))").alias("m"),
-    ).first()
+    r_edges, f_edges, m_edges = _quantile_edges(
+        per_cust,
+        ["-recency_days", "frequency", "monetary"],
+        n_tiles,
+        "rfm_segments: no non-null recency, frequency or monetary values",
+    )
 
     def score(col, edges):
-        s = F.lit(1)
-        for e in edges:
-            s = s + F.when(col > F.lit(float(e)), 1).otherwise(0)
-        return s
+        return F.lit(1) + _bucket_index(col, edges)
 
     out = per_cust.select(
         "cust",
         "recency_days",
         "frequency",
         F.round("monetary", 2).alias("monetary"),
-        score(-F.col("recency_days"), edges_row["r"]).alias("r_score"),
-        score(F.col("frequency"), edges_row["f"]).alias("f_score"),
-        score(F.col("monetary"), edges_row["m"]).alias("m_score"),
+        score(-F.col("recency_days"), r_edges).alias("r_score"),
+        score(F.col("frequency"), f_edges).alias("f_score"),
+        score(F.col("monetary"), m_edges).alias("m_score"),
     )
     return out.withColumn(
         "rfm",
@@ -2687,157 +2659,150 @@ def contingency_stats(
     )
 
 
-def _midrank_map_grouped(
-    counts: "DataFrame", n_buckets: int, group_col: str = "_g"
-) -> "tuple[DataFrame, dict]":
-    """Grouped twin of :func:`_midrank_map` (r17, r16 VERDICT item 6):
-    given a distinct-value frame ``(group, v, c_a, c_b)``, return
-    ``(group, v, c_a, t, rank)`` where ``rank`` is the midrank of v
-    WITHIN its group — all groups computed through ONE agg/window
-    chain and ONE driver edges job, instead of one full chain (with
-    its own approx_percentile action) per group. Midranks are exact
-    for ANY bucketing (the _midrank_map argument), so per-group
-    results are identical to running _midrank_map per group.
-    Callers: spearman_corr (groups = the two columns), quantile_map
-    (groups = new/ref)."""
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_rows = counts.groupBy(group_col).agg(
-        F.expr(
-            "approx_percentile(v, array("
-            f"{', '.join(str(q) for q in qs)}), 1000)"
-        ).alias("e"),
-        F.sum(F.col("c_a") + F.col("c_b")).alias("n"),
-    ).collect()
-    group_edges = {
-        r[group_col]: sorted({float(x) for x in (r["e"] or [])})
-        for r in edges_rows
-    }
-    group_n = {r[group_col]: int(r["n"] or 0) for r in edges_rows}
-    b = F.lit(0)
-    for g, edges in group_edges.items():
-        gb = F.lit(0)
-        for i, e in enumerate(edges):
-            gb = F.when(F.col("v") > F.lit(e), F.lit(i + 1)).otherwise(gb)
-        b = F.when(F.col(group_col) == F.lit(g), gb).otherwise(b)
-    bucketed = counts.withColumn("bucket", b).withColumn(
-        "t", F.col("c_a") + F.col("c_b")
-    )
-    w = Window.partitionBy(group_col, "bucket").orderBy("v")
-    cum = bucketed.select(
-        group_col, "bucket", "v", "c_a", "t",
-        F.sum("t").over(w).alias("cum_incl"),
-    )
-    bw = Window.partitionBy(group_col).orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # <= n_buckets rows per group — bounded
-    offsets = (
-        bucketed.groupBy(group_col, "bucket")
-        .agg(F.sum("t").alias("bt"))
-        .select(
-            group_col, "bucket",
-            F.coalesce(F.sum("bt").over(bw), F.lit(0)).alias("off"),
+def _tag_sides(a: "DataFrame", b: "DataFrame", value_col: str) -> "DataFrame":
+    """The ``(v, side)`` frame of two snapshots of ``value_col`` (v as
+    double; side 0 = ``a``, 1 = ``b``) — the input of
+    :func:`_two_sample_counts` for the two-frame operators."""
+
+    def tag(df, side):
+        return df.select(
+            F.col(value_col).cast("double").alias("v"),
+            F.lit(side).alias("side"),
+        )
+
+    return tag(a, 0).unionByName(tag(b, 1))
+
+
+def _two_sample_counts(sides: "DataFrame", a, b) -> "DataFrame":
+    """Distinct-value count frame of a ``(v, side)`` frame: ``(v, c_a,
+    c_b)`` counting the non-null values whose side is ``a`` / ``b``
+    (other sides dropped) — ONE map-combined aggregate, the only
+    corpus-sized pass of the rank / CDF operators."""
+    side = F.col("side")
+    return (
+        sides.filter(F.col("v").isNotNull() & side.isin(a, b))
+        .groupBy("v")
+        .agg(
+            F.count(F.when(side == F.lit(a), 1)).alias("c_a"),
+            F.count(F.when(side == F.lit(b), 1)).alias("c_b"),
         )
     )
-    avg_rank = (
-        F.col("off") + F.col("cum_incl") - F.col("t")
-        + (F.col("t") + 1) / 2.0
+
+
+def _side_totals(counts: "DataFrame") -> "tuple[int, int]":
+    """(n_a, n_b) of a :func:`_two_sample_counts` frame — one eager
+    probe over the value-domain-sized frame."""
+    n = counts.agg(F.sum("c_a"), F.sum("c_b")).first()
+    return int(n[0] or 0), int(n[1] or 0)
+
+
+def _cum_counts(counts: "DataFrame", n_buckets: int) -> "DataFrame":
+    """Cumulative-count engine of the CDF and rank operators (ks_drift,
+    wasserstein_1d, pr_auc, quantile_map, conformal_interval and the
+    midrank users): given a distinct-value frame ``(v, c_a, c_b)``,
+    return its columns plus ``cum_a`` / ``cum_b`` — the INCLUSIVE
+    running totals of c_a / c_b in v order — and ``prev_v``, the
+    previous distinct value (NULL for the first).
+
+    Two levels, never a single-partition window over data: v is
+    sharded into buckets by driver-literal approx_percentile edges,
+    cumsummed by a window per bucket shard, and stitched with a
+    broadcast offset frame of <= n_buckets rows that also carries the
+    previous bucket's max for ``prev_v``. The edges only balance the
+    shards: the sums are exact integers under ANY bucketing, so every
+    output is identical whatever the sketch returns (an exact
+    `percentile` here would sort the whole value domain in one
+    buffer). Operators with two populations (two snapshots, two
+    columns, new vs reference) count them as c_a / c_b of ONE frame,
+    so one chain serves both."""
+    qs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
+    sketch = counts.agg(
+        F.expr(f"approx_percentile(v, array({qs}), 1000)")
+    ).first()[0]
+    edges = sorted({float(x) for x in sketch or []})
+    bucketed = counts.withColumn("_bk", _bucket_index(F.col("v"), edges))
+    w = Window.partitionBy("_bk").orderBy("v")
+    cum = bucketed.select(
+        *counts.columns,
+        "_bk",
+        F.sum("c_a").over(w).alias("_ca"),
+        F.sum("c_b").over(w).alias("_cb"),
+        F.lag("v").over(w).alias("_pv"),
     )
-    out = cum.join(F.broadcast(offsets), [group_col, "bucket"]).select(
-        group_col, "v", "c_a", "t", avg_rank.alias("rank")
+    bw = Window.orderBy("_bk")  # one partition of <= n_buckets rows
+    before = bw.rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        bucketed.groupBy("_bk")
+        .agg(
+            F.sum("c_a").alias("_ba"),
+            F.sum("c_b").alias("_bb"),
+            F.max("v").alias("_bmax"),
+        )
+        .select(
+            "_bk",
+            F.coalesce(F.sum("_ba").over(before), F.lit(0)).alias("_oa"),
+            F.coalesce(F.sum("_bb").over(before), F.lit(0)).alias("_ob"),
+            F.lag("_bmax").over(bw).alias("_pb"),
+        )
     )
-    return out, group_n
+    return cum.join(F.broadcast(offsets), "_bk").select(
+        *counts.columns,
+        (F.col("_oa") + F.col("_ca")).alias("cum_a"),
+        (F.col("_ob") + F.col("_cb")).alias("cum_b"),
+        F.coalesce(F.col("_pv"), F.col("_pb")).alias("prev_v"),
+    )
+
+
+def _midrank(cum: "Column", t: "Column") -> "Column":
+    """Midrank of a value with inclusive cumulative count ``cum`` and
+    tie count ``t``: the t tied rows take positions cum - t + 1 .. cum,
+    so each gets cum - t + (t + 1) / 2 (exact in double)."""
+    return cum - t + (t + 1) / 2.0
 
 
 def _spearman_rank_maps(base: "DataFrame", n_buckets: int):
-    """Both per-column rank maps of spearman_corr from ONE stacked
-    chain (scan -> grouped counts -> grouped midranks), pinned because
-    both filters consume it."""
+    """Both per-column rank maps of spearman_corr from ONE two-sided
+    count frame (c_a / c_b = how often v occurs in column a / b) and
+    one :func:`_cum_counts` chain: each column's midranks come from
+    its own cumulative count. Pinned because both filters consume
+    it."""
     from indexlab_spark.functions.cache import pin as _pin_
 
     stacked = base.select(
         F.explode(
             F.array(
-                F.struct(F.lit("a").alias("_g"), F.col("_a").alias("v")),
-                F.struct(F.lit("b").alias("_g"), F.col("_b").alias("v")),
+                F.struct(F.lit("a").alias("side"), F.col("_a").alias("v")),
+                F.struct(F.lit("b").alias("side"), F.col("_b").alias("v")),
             )
         ).alias("_s")
-    ).select("_s._g", "_s.v")
-    counts = stacked.groupBy("_g", "v").agg(
-        F.count(F.lit(1)).alias("c_a")
-    ).withColumn("c_b", F.lit(0))
-    rmap, _ = _midrank_map_grouped(counts, n_buckets)
-    rmap = _pin_(rmap, deser=True)  # consumed by both rank joins
-    ra = rmap.filter(F.col("_g") == "a").select(
-        F.col("v").alias("_a"), F.col("rank").alias("_r_a")
+    ).select("_s.v", "_s.side")
+    cum = _pin_(  # consumed by both rank joins
+        _cum_counts(_two_sample_counts(stacked, "a", "b"), n_buckets).select(
+            "v", "c_a", "c_b", "cum_a", "cum_b"
+        ),
+        deser=True,
     )
-    rb = rmap.filter(F.col("_g") == "b").select(
-        F.col("v").alias("_b"), F.col("rank").alias("_r_b")
+    ra = cum.filter(F.col("c_a") > 0).select(
+        F.col("v").alias("_a"),
+        _midrank(F.col("cum_a"), F.col("c_a")).alias("_r_a"),
+    )
+    rb = cum.filter(F.col("c_b") > 0).select(
+        F.col("v").alias("_b"),
+        _midrank(F.col("cum_b"), F.col("c_b")).alias("_r_b"),
     )
     return ra, rb
 
 
-def _midrank_map(counts: "DataFrame", n_buckets: int) -> "DataFrame":
-    """Shared rank engine for :func:`mann_whitney_u` / :func:`roc_auc`
-    / :func:`spearman_corr`: given a distinct-value frame ``(v, c_a,
-    c_b)``, return ``(v, c_a, t, rank)`` where ``rank`` is the global
-    MIDRANK of value v and ``t`` its tie count, via the ks_drift
-    two-level bucketed cumsum — per-bucket parallel windows plus an
-    n_buckets-row offset frame, never a single-partition window over
-    data. Edges come from approx_percentile: they only balance the
-    bucket shards — the cumsum is exact for ANY bucketing, so the
-    midranks (and every downstream statistic) are identical whatever
-    the sketch returns; the exact `percentile` here was the single
-    most expensive line in the spearman bench point (a one-buffer
-    sort of the whole value domain, 9.3s -> measured after the swap
-    in bench_full.json)."""
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = counts.agg(
-        F.expr(
-            "approx_percentile(v, array("
-            f"{', '.join(str(q) for q in qs)}), 1000)"
-        ).alias("e")
-    ).first()
-    edges = sorted({float(x) for x in edges_row["e"]})
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col("v") > F.lit(e), F.lit(i + 1)).otherwise(b)
-    bucketed = counts.withColumn("bucket", b).withColumn(
-        "t", F.col("c_a") + F.col("c_b")
-    )
-    w = Window.partitionBy("bucket").orderBy("v")
-    cum = bucketed.select(
-        "bucket", "v", "c_a", "t", F.sum("t").over(w).alias("cum_incl")
-    )
-    bw = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # single-partition window over <= n_buckets rows — bounded
-    offsets = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("t").alias("bt"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bt").over(bw), F.lit(0)).alias("off"),
-        )
-    )
-    avg_rank = (
-        F.col("off") + F.col("cum_incl") - F.col("t")
-        + (F.col("t") + 1) / 2.0
-    )
-    return cum.join(F.broadcast(offsets), "bucket").select(
-        "v", "c_a", "t", avg_rank.alias("rank")
-    )
-
-
 def _midrank_sums(counts: "DataFrame", n_buckets: int) -> "DataFrame":
-    """Rank-sum + tie-term reduction over :func:`_midrank_map` — the
-    1-row frame (r_a = sum of c_a * midrank, tie = sum(t^3 - t)) that
+    """Rank-sum + tie-term reduction over the pooled midranks of a
+    ``(v, c_a, c_b)`` count frame — the 1-row frame (r_a = sum of c_a
+    * midrank, tie = sum(t^3 - t) with t = c_a + c_b) that
     mann_whitney_u / roc_auc consume."""
-    return _midrank_map(counts, n_buckets).agg(
-        F.sum(F.col("c_a") * F.col("rank")).alias("r_a"),
-        F.sum(
-            F.col("t").cast("double") * F.col("t") * F.col("t")
-            - F.col("t")
-        ).alias("tie"),
+    t = F.col("c_a") + F.col("c_b")
+    rank = _midrank(F.col("cum_a") + F.col("cum_b"), t)
+    return _cum_counts(counts, n_buckets).agg(
+        F.sum(F.col("c_a") * rank).alias("r_a"),
+        F.sum(t.cast("double") * t * t - t).alias("tie"),
     )
 
 
@@ -2877,20 +2842,15 @@ def mann_whitney_u(
     NULL u/mu/sigma/z and a false flag, matching ab_test_report's
     degenerate-arm contract.
     """
-    g = F.col(group_col)
-    counts = (
-        df.select(g.alias("_g"), F.col(value_col).cast("double").alias("v"))
-        .filter(F.col("v").isNotNull() & g.isin(group_a, group_b))
-        .groupBy("v")
-        .agg(
-            F.count(F.when(F.col("_g") == F.lit(group_a), 1)).alias("c_a"),
-            F.count(F.when(F.col("_g") == F.lit(group_b), 1)).alias("c_b"),
-        )
+    counts = _two_sample_counts(
+        df.select(
+            F.col(value_col).cast("double").alias("v"),
+            F.col(group_col).alias("side"),
+        ),
+        group_a,
+        group_b,
     )
-    tot = counts.agg(
-        F.sum("c_a").alias("n_a"), F.sum("c_b").alias("n_b")
-    ).first()
-    n_a, n_b = int(tot["n_a"] or 0), int(tot["n_b"] or 0)
+    n_a, n_b = _side_totals(counts)
     n = n_a + n_b
     if n_a == 0 or n_b == 0 or n < 2:
         return df.sparkSession.range(1).select(
@@ -3110,6 +3070,22 @@ def fd_discovery(
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
+def _label_score_counts(
+    df: "DataFrame", label_col: str, score_col: str
+) -> "DataFrame":
+    """(v = score, c_a = positives, c_b = negatives) count frame under
+    the roc_auc label contract: ``label == 1`` / ``label == 0`` after a
+    double cast; other labels and NULL scores are dropped."""
+    return _two_sample_counts(
+        df.select(
+            F.col(score_col).cast("double").alias("v"),
+            F.col(label_col).cast("double").alias("side"),
+        ),
+        1.0,
+        0.0,
+    )
+
+
 def roc_auc(
     df: "DataFrame",
     label_col: str,
@@ -3134,20 +3110,8 @@ def roc_auc(
     Output (one row): n_pos, n_neg, auc (6dp), gini (2*auc - 1, 6dp).
     Degenerate input (an empty class) yields NULL auc/gini.
     """
-    y = F.col(label_col).cast("double")
-    counts = (
-        df.select(y.alias("_y"), F.col(score_col).cast("double").alias("v"))
-        .filter(F.col("v").isNotNull() & F.col("_y").isin(0.0, 1.0))
-        .groupBy("v")
-        .agg(
-            F.count(F.when(F.col("_y") == 1.0, 1)).alias("c_a"),
-            F.count(F.when(F.col("_y") == 0.0, 1)).alias("c_b"),
-        )
-    )
-    tot = counts.agg(
-        F.sum("c_a").alias("np"), F.sum("c_b").alias("nn")
-    ).first()
-    n_pos, n_neg = int(tot["np"] or 0), int(tot["nn"] or 0)
+    counts = _label_score_counts(df, label_col, score_col)
+    n_pos, n_neg = _side_totals(counts)
     if n_pos == 0 or n_neg == 0:
         return df.sparkSession.range(1).select(
             F.lit(n_pos).alias("n_pos"),
@@ -3420,18 +3384,10 @@ def lift_table(
     base = df.select(s.alias("_s"), y.alias("_y")).filter(
         F.col("_s").isNotNull() & F.col("_y").isin(0.0, 1.0)
     )
-    qs = [i / n_tiles for i in range(1, n_tiles)]
-    edges_row = base.agg(
-        F.expr(
-            f"percentile(_s, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    if edges_row["e"] is None:
-        raise ValueError("lift_table: no usable rows")
-    edges = [float(x) for x in edges_row["e"]]
-    asc = F.lit(1)
-    for e in edges:
-        asc = asc + F.when(F.col("_s") > F.lit(e), 1).otherwise(0)
+    [edges] = _quantile_edges(
+        base, ["_s"], n_tiles, "lift_table: no usable rows"
+    )
+    asc = F.lit(1) + _bucket_index(F.col("_s"), edges)
     per_tile = (
         base.withColumn("tile", F.lit(n_tiles + 1) - asc)
         .groupBy("tile")
@@ -3707,9 +3663,9 @@ def spearman_corr(
     relationship scores rho = 1 here while Pearson under-reads it, and
     outliers move ranks by at most their count.
 
-    Scale shape: each column reduces to its DISTINCT-VALUE frame (one
-    map-combined count agg per column), midranks come from the shared
-    :func:`_midrank_map` two-level bucketed cumsum, and the rank maps
+    Scale shape: both columns reduce to ONE two-sided DISTINCT-VALUE
+    count frame (one map-combined agg), midranks come from the shared
+    :func:`_cum_counts` two-level bucketed cumsum, and the rank maps
     join back to the row frame by value — two keyed joins on the
     (usually far smaller) value domain, then ONE moment aggregation.
     No global sort, no single-partition window, no row-level rank
@@ -3724,8 +3680,8 @@ def spearman_corr(
     # r16: base feeds three consumers (both distinct-value count aggs
     # and the rank join) — pin it so the scan+cast runs once, not 3x.
     # r17 (VERDICT item 6): deser — every consumer is a JVM agg/join;
-    # and BOTH rank maps now come from one stacked grouped-midrank
-    # chain (one counts exchange + one edges job, was two of each)
+    # and BOTH rank maps now come from one two-sided count frame and
+    # one cumsum chain (one counts exchange + one edges job)
     base = _pin_(
         df.select(
             F.col(col_a).cast("double").alias("_a"),
@@ -3934,11 +3890,11 @@ def conformal_interval(
     q_hat is the k-th smallest |y - yhat| with k = ceil((n+1)(1-alpha))
     — an EXACT order statistic, found without a global sort: the
     residual distinct-value count frame feeds the shared
-    :func:`_midrank_map` two-level cumsum and q_hat is the smallest
-    value whose through-cumulative reaches k (min-aggregate over the
-    value frame). Raises when the calibration set is too small for
-    the requested level (k > n — the standard conformal requirement
-    n >= (1-alpha)/alpha points).
+    :func:`_cum_counts` two-level cumsum and q_hat is the smallest
+    value whose inclusive cumulative count reaches k (min-aggregate
+    over the value frame). Raises when the calibration set is too
+    small for the requested level (k > n — the standard conformal
+    requirement n >= (1-alpha)/alpha points).
 
     Output (one row): n, k, q_hat (6dp), alpha.
     """
@@ -3967,11 +3923,11 @@ def conformal_interval(
             f"conformal_interval: calibration set too small (n={n}, "
             f"need k={k} <= n for alpha={alpha})"
         )
-    ranked = _midrank_map(counts, n_buckets)
-    # through-cumulative from the midrank: cum(v) = rank + (t-1)/2
-    qhat = ranked.filter(
-        (F.col("rank") + (F.col("t") - 1) / 2.0) >= F.lit(float(k))
-    ).agg(F.min("v").alias("q"))
+    qhat = (
+        _cum_counts(counts, n_buckets)
+        .filter(F.col("cum_a") >= F.lit(float(k)))
+        .agg(F.min("v").alias("q"))
+    )
     return qhat.select(
         F.lit(int(n)).cast("long").alias("n"),
         F.lit(int(k)).cast("long").alias("k"),
@@ -4541,8 +4497,8 @@ def pr_auc(
 
     Scale shape (the roc_auc discipline): one map-combined
     (score -> pos, neg counts) agg is the only corpus pass; the
-    ascending cumulatives come from the same two-level bucketed
-    cumsum pattern (per-bucket parallel windows + an n_buckets-row
+    ascending cumulatives come from the shared :func:`_cum_counts`
+    two-level cumsum (per-bucket parallel windows + an n_buckets-row
     offset frame — never a single-partition data window); AP is one
     final aggregate over the value frame. Label/exclusion contract as
     roc_auc (non-binary / NULL rows excluded).
@@ -4551,20 +4507,8 @@ def pr_auc(
     (n_pos / n — the random-classifier baseline AP). Degenerate
     single-class input yields NULL pr_auc.
     """
-    y = F.col(label_col).cast("double")
-    counts = (
-        df.select(y.alias("_y"), F.col(score_col).cast("double").alias("v"))
-        .filter(F.col("v").isNotNull() & F.col("_y").isin(0.0, 1.0))
-        .groupBy("v")
-        .agg(
-            F.count(F.when(F.col("_y") == 1.0, 1)).alias("c_a"),
-            F.count(F.when(F.col("_y") == 0.0, 1)).alias("c_b"),
-        )
-    )
-    tot = counts.agg(
-        F.sum("c_a").alias("np"), F.sum("c_b").alias("nn")
-    ).first()
-    n_pos, n_neg = int(tot["np"] or 0), int(tot["nn"] or 0)
+    counts = _label_score_counts(df, label_col, score_col)
+    n_pos, n_neg = _side_totals(counts)
     if n_pos == 0 or n_neg == 0:
         return df.sparkSession.range(1).select(
             F.lit(n_pos).alias("n_pos"),
@@ -4572,47 +4516,11 @@ def pr_auc(
             F.lit(None).cast("double").alias("pr_auc"),
             F.lit(None).cast("double").alias("prevalence"),
         )
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = counts.agg(
-        F.expr(
-            "approx_percentile(v, array("
-            f"{', '.join(str(q) for q in qs)}), 1000)"
-        ).alias("e")
-    ).first()
-    edges = sorted({float(x) for x in edges_row["e"]})
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col("v") > F.lit(e), F.lit(i + 1)).otherwise(b)
-    bucketed = counts.withColumn("bucket", b)
-    w = Window.partitionBy("bucket").orderBy("v")
-    cum = bucketed.select(
-        "bucket", "v", "c_a", "c_b",
-        F.sum("c_a").over(w).alias("ca_i"),
-        F.sum("c_b").over(w).alias("cb_i"),
-    )
-    bw = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # single-partition window over <= n_buckets rows — bounded
-    offsets = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("c_a").alias("ba"), F.sum("c_b").alias("bb"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("ba").over(bw), F.lit(0)).alias("oa"),
-            F.coalesce(F.sum("bb").over(bw), F.lit(0)).alias("ob"),
-        )
-    )
-    tp = F.lit(n_pos) - (F.col("oa") + F.col("ca_i")) + F.col("c_a")
-    fp = F.lit(n_neg) - (F.col("ob") + F.col("cb_i")) + F.col("c_b")
-    ap = (
-        cum.join(F.broadcast(offsets), "bucket")
-        .agg(
-            F.sum(
-                F.col("c_a")
-                / F.lit(float(n_pos))
-                * (tp.cast("double") / (tp + fp))
-            ).alias("_ap")
-        )
+    tp = F.lit(n_pos) - F.col("cum_a") + F.col("c_a")
+    fp = F.lit(n_neg) - F.col("cum_b") + F.col("c_b")
+    precision = tp.cast("double") / (tp + fp)
+    ap = _cum_counts(counts, n_buckets).agg(
+        F.sum(F.col("c_a") / F.lit(float(n_pos)) * precision).alias("_ap")
     )
     return ap.select(
         F.lit(n_pos).alias("n_pos"),
@@ -4639,8 +4547,8 @@ def quantile_map(
     reference transfer.
 
     F_new via Hazen plotting positions on the NEW distinct-value
-    midranks (p = (midrank - 0.5) / n, the shared
-    :func:`_midrank_map` engine — ties map identically by
+    midranks (p = (midrank - 0.5) / n, from the shared
+    :func:`_cum_counts` engine — ties map identically by
     construction); Q_ref is the exact type-7 interpolated quantile,
     evaluated WITHOUT sorting the reference: the two bracketing order
     statistics per target (floor/ceil of p * (n_ref - 1)) resolve
@@ -4656,37 +4564,30 @@ def quantile_map(
     """
     from indexlab_spark.functions.cache import pin as _pin_
 
-    def _counts(src):
-        return (
-            src.select(F.col(value_col).cast("double").alias("v"))
-            .filter(F.col("v").isNotNull())
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("c_a"))
-            .withColumn("c_b", F.lit(0))
-        )
-
-    # r17 (r16 VERDICT item 7): the two sizing .first() jobs and the
-    # two per-distribution approx_percentile actions fold into ONE
-    # grouped-midrank chain over the tagged union — one driver job
-    # (edges + totals per group) and one agg/window chain total.
-    counts = (
-        _counts(new_df).withColumn("_g", F.lit("new"))
-        .unionByName(_counts(ref_df).withColumn("_g", F.lit("ref")))
-    )
-    rmap, group_n = _midrank_map_grouped(counts, n_buckets)
-    n_ref = group_n.get("ref", 0)
-    n_new = group_n.get("new", 0)
+    # one count frame over both sides: c_a = new, c_b = ref; each side's
+    # ranks come from its own cumulative count, so one cumsum chain
+    # serves both and the totals come from one driver job
+    counts = _two_sample_counts(_tag_sides(new_df, ref_df, value_col), 0, 1)
+    n_new, n_ref = _side_totals(counts)
     if n_ref == 0:
         raise ValueError("quantile_map: empty reference distribution")
     if n_new == 0:
         return local_frame(
             new_df.sparkSession, [], "value double, p double, mapped double"
         )
-    rmap = _pin_(rmap, deser=True)  # feeds targets AND ref_ranges
+    cum = _pin_(  # feeds targets AND ref_ranges
+        _cum_counts(counts, n_buckets).select(
+            "v", "c_a", "c_b", "cum_a", "cum_b"
+        ),
+        deser=True,
+    )
     # targets: Hazen p per distinct new value, bracketing ref positions
-    targets = rmap.filter(F.col("_g") == "new").select(
+    targets = cum.filter(F.col("c_a") > 0).select(
         F.col("v").alias("value"),
-        ((F.col("rank") - 0.5) / F.lit(float(n_new))).alias("p"),
+        (
+            (_midrank(F.col("cum_a"), F.col("c_a")) - 0.5)
+            / F.lit(float(n_new))
+        ).alias("p"),
     ).withColumn(
         "_h", F.col("p") * F.lit(float(n_ref - 1))
     ).withColumn(
@@ -4696,15 +4597,11 @@ def quantile_map(
     ).withColumn(
         "_frac", F.col("_h") - F.col("_k0")
     )
-    # reference cumulative ranges [lo, hi] of 0-indexed positions per
-    # distinct value (midrank encodes the range: lo = rank-(t+1)/2,
-    # hi = lo + t - 1)
-    ref_ranges = rmap.filter(F.col("_g") == "ref").select(
+    # reference ranges [lo, hi] of 0-indexed positions per distinct value
+    ref_ranges = cum.filter(F.col("c_b") > 0).select(
         F.col("v").alias("_rv"),
-        (F.col("rank") - (F.col("t") + 1) / 2.0).cast("long").alias("_lo"),
-        (F.col("rank") + (F.col("t") + 1) / 2.0 - 2).cast("long").alias(
-            "_hi"
-        ),
+        (F.col("cum_b") - F.col("c_b")).alias("_lo"),
+        (F.col("cum_b") - 1).alias("_hi"),
     )
     width = max(1, -(-int(n_ref) // 1024))  # <= 1024 position buckets
     ref_bucketed = ref_ranges.select(
@@ -6817,18 +6714,10 @@ def qini_curve(
         & F.col("_y").isNotNull()
         & F.col("_s").isNotNull()
     )
-    qs = [i / n_tiles for i in range(1, n_tiles)]
-    edges_row = base.agg(
-        F.expr(
-            f"percentile(_s, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    if edges_row["e"] is None:
-        raise ValueError("qini_curve: no usable rows")
-    edges = [float(x) for x in edges_row["e"]]
-    asc = F.lit(1)
-    for e in edges:
-        asc = asc + F.when(F.col("_s") > F.lit(e), 1).otherwise(0)
+    [edges] = _quantile_edges(
+        base, ["_s"], n_tiles, "qini_curve: no usable rows"
+    )
+    asc = F.lit(1) + _bucket_index(F.col("_s"), edges)
     is_t = F.col("_tr") == 1
     per_tile = (
         base.withColumn("tile", F.lit(n_tiles + 1) - asc)
@@ -7139,82 +7028,27 @@ def wasserstein_1d(
     unit of probability mass must MOVE, in the column's own units
     (a 2x price shift reads as dollars, not as a capped sup).
 
-    Scale shape is ks_drift's two-level cumsum: the per-value count
-    frame (distinct values x 2 counts — the only data-sized frame) is
-    range-bucketed by driver-literal quantile edges, cumsummed within
-    buckets in parallel, and stitched with broadcast per-bucket
-    offsets. The integral needs each value's PREDECESSOR: within a
-    bucket that is one lag; across the boundary it is the previous
-    bucket's max value, carried on the same broadcast offset frame —
-    never a single-partition window over the data. CDFs at the
-    predecessor come for free as (offset + cum - own count), no
+    Scale shape is ks_drift's: one map-combined count frame over the
+    tagged union of both snapshots (distinct values x 2 counts — the
+    only data-sized frame) feeds the shared :func:`_cum_counts`
+    two-level cumsum, which also returns each value's PREDECESSOR
+    (``prev_v``) — never a single-partition window over the data.
+    CDFs at the predecessor come for free as (cum - own count), no
     second lag.
 
     Output: one row — wasserstein (6dp), n_old, n_new.
     """
-    def side(df, name):
-        return (
-            df.select(F.col(value_col).cast("double").alias("v"))
-            .filter(F.col("v").isNotNull())
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    counts = (
-        side(old, "c_old")
-        .join(side(new, "c_new"), "v", "full_outer")
-        .na.fill({"c_old": 0, "c_new": 0})
-    )
-    tot = counts.agg(
-        F.sum("c_old").alias("n_old"), F.sum("c_new").alias("n_new")
-    ).first()
-    n_old, n_new = int(tot["n_old"] or 0), int(tot["n_new"] or 0)
+    counts = _two_sample_counts(_tag_sides(old, new, value_col), 0, 1)
+    n_old, n_new = _side_totals(counts)
     if n_old == 0 or n_new == 0:
         raise ValueError(
             "wasserstein_1d: both snapshots need non-null values"
         )
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    edges_row = counts.agg(
-        F.expr(
-            f"percentile(v, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    edges = sorted({float(x) for x in edges_row["e"]})
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col("v") > F.lit(e), F.lit(i + 1)).otherwise(b)
-    bucketed = counts.withColumn("bucket", b)
-    w = Window.partitionBy("bucket").orderBy("v")
-    cum = bucketed.select(
-        "bucket", "v", "c_old", "c_new",
-        F.sum("c_old").over(w).alias("cum_old"),
-        F.sum("c_new").over(w).alias("cum_new"),
-        F.lag("v").over(w).alias("_pv"),
-    )
-    btot = bucketed.groupBy("bucket").agg(
-        F.sum("c_old").alias("bo"),
-        F.sum("c_new").alias("bn"),
-        F.max("v").alias("bmax"),
-    )
-    bw = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # single-partition window over <= n_buckets rows — bounded
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bo").over(bw), F.lit(0)).alias("off_old"),
-        F.coalesce(F.sum("bn").over(bw), F.lit(0)).alias("off_new"),
-        F.lag("bmax").over(Window.orderBy("bucket")).alias("prev_bmax"),
-    )
-    joined = cum.join(F.broadcast(offsets), "bucket")
-    prev_v = F.coalesce(F.col("_pv"), F.col("prev_bmax"))
-    cdf_prev_old = (
-        F.col("off_old") + F.col("cum_old") - F.col("c_old")
-    ) / F.lit(float(n_old))
-    cdf_prev_new = (
-        F.col("off_new") + F.col("cum_new") - F.col("c_new")
-    ) / F.lit(float(n_new))
+    prev_v = F.col("prev_v")
+    cdf_prev_old = (F.col("cum_a") - F.col("c_a")) / F.lit(float(n_old))
+    cdf_prev_new = (F.col("cum_b") - F.col("c_b")) / F.lit(float(n_new))
     term = F.abs(cdf_prev_old - cdf_prev_new) * (F.col("v") - prev_v)
-    out = joined.agg(
+    out = _cum_counts(counts, n_buckets).agg(
         F.round(
             F.coalesce(
                 F.sum(F.when(prev_v.isNotNull(), term)), F.lit(0.0)

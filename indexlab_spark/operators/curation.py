@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from indexlab_spark.functions.cache import pin as _pin
+from indexlab_spark.operators.analytics import _bucket_index, _quantile_edges
 from indexlab_spark.operators.textstats import STOPWORDS, tokens
 from indexlab_spark.plans.colocate import fan_out as _fan_out
 from indexlab_spark.session import local_frame
@@ -283,6 +284,16 @@ def decontaminate(
         .distinct()
     )
     hits = t_sh.join(F.broadcast(b_sh), "shingle")
+    return _contamination(hits, train, id_col, keep_clean)
+
+
+def _contamination(
+    hits: DataFrame, train: DataFrame, id_col: str, keep_clean: bool
+) -> DataFrame:
+    """Shared tail of the decontaminate family: ``(id, shingle)`` hit
+    pairs -> (id, n_overlap distinct shared shingles, contaminated);
+    contaminated docs only, or every training doc with ``keep_clean``
+    (one left join of the per-doc hits back onto the train ids)."""
     per_doc = hits.groupBy("id").agg(
         F.count_distinct("shingle").alias("n_overlap")
     )
@@ -473,18 +484,7 @@ def bloom_decontaminate(
     # exact verify: plain shuffle join (NO broadcast hint) — candidate-
     # sized vs benchmark shingles; false positives are eliminated here
     hits = candidates.join(b_sh, "shingle")
-    per_doc = hits.groupBy("id").agg(
-        F.count_distinct("shingle").alias("n_overlap")
-    )
-    if keep_clean:
-        per_doc = (
-            train.select(_c(id_col).alias("id"))
-            .join(per_doc, "id", "left")
-            .na.fill({"n_overlap": 0})
-        )
-    return per_doc.select(
-        "id", "n_overlap", (F.col("n_overlap") >= 1).alias("contaminated")
-    )
+    return _contamination(hits, train, id_col, keep_clean)
 
 
 def hash_sample(
@@ -1336,21 +1336,13 @@ def isotonic_calibrate(
         F.col(score_col).cast("double").alias("_s"),
         F.col(label_col).cast("long").alias("_y"),
     )
-    qs = [i / n_bins for i in range(1, n_bins)]
-    edges_row = base.agg(
-        F.expr(
-            f"percentile(_s, array({', '.join(str(q) for q in qs)}))"
-        ).alias("e")
-    ).first()
-    if edges_row is None or edges_row["e"] is None:
-        raise ValueError("isotonic_calibrate: no non-null rows")
-    edges = [float(x) for x in edges_row["e"]]
-
-    b = F.lit(0)
-    for i, e in enumerate(edges):
-        b = F.when(F.col("_s") > F.lit(e), F.lit(i + 1)).otherwise(b)
+    [edges] = _quantile_edges(
+        base, ["_s"], n_bins, "isotonic_calibrate: no non-null rows"
+    )
     binned = (
-        base.select(b.alias("bin"), "_s", "_y")
+        base.select(
+            _bucket_index(F.col("_s"), edges).alias("bin"), "_s", "_y"
+        )
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n"),

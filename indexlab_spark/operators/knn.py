@@ -280,7 +280,11 @@ def _scan_topk(
     becomes an (n_q, batch) score matrix ``score_batch(state, payload)``
     against the broadcast ``bc = (query ids, state)``, and each batch
     emits only its per-query top-k, best first. The shuffle then carries
-    ``batches x n_q x k`` candidate rows, never the cross product."""
+    ``batches x n_q x k`` candidate rows, never the cross product.
+
+    The cut is on :func:`_keep_top`'s order, (score desc, doc id asc), so
+    no candidate the final rank would keep is lost inside a batch when
+    scores tie at the k-th place."""
 
     def _partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, state = bc.value
@@ -289,19 +293,28 @@ def _scan_topk(
                 continue
             scores = score_batch(state, pdf[payload_col])
             kk = min(k, scores.shape[1])
-            # argpartition then stable sort of the top slice per query —
-            # all rows at once (take_along_axis), no per-query python
-            # loop: the loop was the batch hot path once the matmul
-            # itself went to BLAS (measured ~2x on the b2 bench shape)
+            doc_ids = pdf[doc_id_col].to_numpy()
+            id_rank = np.empty(len(doc_ids), dtype=np.int64)
+            id_rank[np.argsort(doc_ids, kind="stable")] = np.arange(len(doc_ids))
+            # argpartition + one sort of the top slice, all queries at once
+            # (take_along_axis): a per-query python loop was the batch hot
+            # path once the matmul itself went to BLAS (measured ~2x on the
+            # b2 bench shape)
             part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            order = np.argsort(
-                -np.take_along_axis(scores, part, axis=1), axis=1, kind="stable"
+            # argpartition keeps an arbitrary member of a tie at the k-th
+            # score; only rows where more than kk scores reach it are re-cut
+            kth = np.take_along_axis(scores, part, axis=1).min(axis=1)
+            for r in np.flatnonzero((scores >= kth[:, None]).sum(axis=1) > kk):
+                cand = np.flatnonzero(scores[r] >= kth[r])
+                part[r] = cand[np.lexsort((id_rank[cand], -scores[r, cand]))[:kk]]
+            order = np.lexsort(
+                (id_rank[part], -np.take_along_axis(scores, part, axis=1)), axis=1
             )
             top = np.take_along_axis(part, order, axis=1)
             yield pd.DataFrame(
                 {
                     query_id_col: np.repeat(ids, kk),
-                    doc_id_col: pdf[doc_id_col].to_numpy()[top.ravel()],
+                    doc_id_col: doc_ids[top.ravel()],
                     "score": np.take_along_axis(scores, top, axis=1).ravel(),
                 }
             )
@@ -488,7 +501,16 @@ def _sampled_train_matrix(
         sample_df = chunks_df.select(vec_col)
     else:
         frac = min(1.0, 1.2 * target / n)
-        sample_df = chunks_df.select(vec_col).sample(frac, seed=seed).limit(target)
+        # fraction by keyword: pyspark's sample(frac, seed=...) form
+        # drops the seed for a random one. Ordered by a seeded hash
+        # before the cut: a bare limit keeps whichever sampled
+        # partitions arrive first
+        sample_df = (
+            chunks_df.select(vec_col)
+            .sample(fraction=frac, seed=seed)
+            .orderBy(F.xxhash64(F.lit(seed), F.col(vec_col)))
+            .limit(target)
+        )
     return np.array(sample_df.toPandas()[vec_col].tolist(), dtype=np.float64)
 
 

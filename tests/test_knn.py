@@ -934,3 +934,48 @@ def test_pq_search_empty_codebooks_raises_like_pq_append(spark, emb, queries):
         pq_append(corpus, empty)
     with pytest.raises(ValueError, match="pq_search: " + msg):
         pq_search(spark, queries, codes_df, empty, K)
+
+
+def test_knn_matmul_equals_join_when_ties_straddle_k(spark):
+    """Duplicate vectors tie at the k-th score inside one Arrow batch.
+    The batch top-k must cut on the final rank's (score desc, doc id
+    asc), so knn_matmul keeps the docs knn_join keeps. Integer
+    components make every dot product exact, so the ties are exact
+    under any BLAS; doc ids are out of position order."""
+    from indexlab_spark.session import local_frame
+
+    rng = np.random.default_rng(7)
+    base = rng.integers(-2, 3, size=(3, 8)).astype(float)
+    doc_ids = rng.permutation(np.arange(1000, 1120))
+    corpus = local_frame(
+        spark,
+        [(int(d), base[i % 3].tolist()) for i, d in enumerate(doc_ids)],
+        "doc_id long, embedding array<double>",
+    )
+    queries = local_frame(
+        spark,
+        [(q, base[q % 3].tolist()) for q in range(6)],
+        "query_id int, qvec array<double>",
+    )
+    for k in (1, 3, 7, 45):
+        a = knn_join(queries, corpus, k).select("query_id", "doc_id", "rank")
+        b = knn_matmul(spark, queries, corpus, k).select(
+            "query_id", "doc_id", "rank"
+        )
+        assert sorted(map(tuple, b.collect())) == sorted(
+            map(tuple, a.collect())
+        ), f"k={k}"
+
+
+def test_sampled_sq8_build_is_deterministic(spark, emb):
+    """Past ``sample_rows`` the training sample is cut in a seeded hash
+    order, so same-seed sampled builds give the same params frame."""
+    from indexlab_spark.operators.knn import build_sq8
+
+    corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
+    assert corpus.count() > 200
+    params = [
+        sorted(map(tuple, build_sq8(corpus, sample_rows=200)[1].collect()))
+        for _ in range(3)
+    ]
+    assert params[0] == params[1] == params[2]
