@@ -15663,8 +15663,10 @@ def oracle_sql() -> dict[str, str]:
                 FROM cc GROUP BY 1
             )
             SELECT source, n, richness,
-                   round(greatest(ln(CAST(n AS DOUBLE)) - sml / n, 0.0),
-                         6) AS shannon,
+                   least(round(greatest(ln(CAST(n AS DOUBLE)) - sml / n,
+                                        0.0), 6),
+                         floor(ln(CAST(richness AS DOUBLE)) * 1e6) / 1e6)
+                       AS shannon,
                    round(1.0 - sm2 / (CAST(n AS DOUBLE) * n), 6)
                        AS simpson,
                    round(CASE WHEN richness > 1

@@ -6972,8 +6972,8 @@ def diversity_index(
     (ln 1 = 0; no evenness to speak of), entropy and simpson exactly
     0.
 
-    Output: group_cols + n (rows), richness (classes), shannon (6dp),
-    simpson (6dp), evenness (6dp).
+    Output: group_cols + n (rows), richness (classes), shannon (6dp,
+    never above ln richness), simpson (6dp), evenness (6dp).
     """
     base = df.filter(F.col(class_col).isNotNull())
     cc = base.groupBy(*group_cols, F.col(class_col).alias("_c")).agg(
@@ -6996,21 +6996,21 @@ def _diversity_table(cc: "DataFrame", group_cols: list[str]) -> "DataFrame":
         F.sum(F.col("_m") * F.col("_m")).cast("double").alias("_sm2"),
     )
     n = F.col("n").cast("double")
-    shannon = F.log(n) - F.col("_sml") / n
+    # clamp the 1e-16-class float residue of single-class groups
+    shannon = F.greatest(F.log(n) - F.col("_sml") / n, F.lit(0.0))
+    h_max = F.log(F.col("richness").cast("double"))
     return g.select(
         *group_cols,
         "n",
         "richness",
-        # clamp the 1e-16-class float residue of single-class groups
-        F.round(F.greatest(shannon, F.lit(0.0)), 6).alias("shannon"),
+        # capped at ln(richness) cut to 6dp: an even 5-class mix has
+        # H = ln 5 = 1.6094379..., which rounds UP past its own ceiling
+        F.least(F.round(shannon, 6), F.floor(h_max * 1e6) / 1e6).alias(
+            "shannon"
+        ),
         F.round(F.lit(1.0) - F.col("_sm2") / (n * n), 6).alias("simpson"),
         F.round(
-            F.when(
-                F.col("richness") > 1,
-                F.greatest(shannon, F.lit(0.0))
-                / F.log(F.col("richness").cast("double")),
-            ),
-            6,
+            F.when(F.col("richness") > 1, shannon / h_max), 6
         ).alias("evenness"),
     )
 
