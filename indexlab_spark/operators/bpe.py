@@ -15,8 +15,8 @@ no corpus re-reads.
 
 The merge loop is driver-synchronized by nature (merge i+1's counts
 depend on merge i — the algorithm is sequential by definition); like
-pagerank, AQE is disabled for small vocabularies during the loop
-(replanning dominates vocab-frame jobs) and restored after.
+pagerank, AQE is off during the loop (replanning dominates vocab-frame
+jobs; ``session._loop_aqe``) and restored after.
 """
 
 from __future__ import annotations
@@ -25,6 +25,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from indexlab_spark.session import _loop_aqe
 
 END = "</w>"
 
@@ -124,10 +126,8 @@ def train_bpe(
         )
     finally:
         word_freqs.unpersist()
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     merges: list[tuple[str, str, int]] = []
-    try:
+    with _loop_aqe(spark):
         for _ in range(n_merges):
             # size filter also guards Spark's descending sequence(): a
             # fully-merged single-symbol word would make sequence(0, -1)
@@ -156,8 +156,6 @@ def train_bpe(
             vocab = vocab.select(
                 "freq", _make_merge(left, right)(F.col("syms")).alias("syms")
             ).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     return merges
 
 

@@ -47,6 +47,7 @@ from indexlab_spark.functions.cache import pin as _pin
 # conversion (r4 VERDICT cleanup item). min_fraction=1.0 preserves the
 # historical dedup behavior: spread whenever below full parallelism.
 from indexlab_spark.plans.colocate import fan_out as _fan_out
+from indexlab_spark.session import _loop_aqe
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -79,6 +80,80 @@ def _endpoints(e: DataFrame, a_col: str, b_col: str,
     return e.select(
         F.explode(F.array(F.col(a_col), F.col(b_col))).alias(out)
     )
+
+
+def _simple_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The canonical simple-graph edge frame ``(a, b)`` with ``a < b``:
+    self-loops dropped, duplicate and reversed edges collapsed. An edge
+    with a NULL endpoint drops too, because ``a != b`` is NULL for it."""
+    return (
+        edges.filter(F.col(a_col) != F.col(b_col))
+        .select(
+            F.least(F.col(a_col), F.col(b_col)).alias("a"),
+            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
+        )
+        .distinct()
+    )
+
+
+def _triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Every triangle of a canonical edge frame (:func:`_simple_edges`),
+    found once by the degree-ordered orientation of Suri & Vassilvitskii
+    (2011, public): each edge points from its lower-(degree, id)
+    endpoint to the higher one, so the oriented out-degree is
+    O(sqrt(m)) for any degree distribution (a hub that would generate
+    deg^2 wedges naively generates almost none, because nearly all its
+    edges point INTO it). A triangle is a wedge (u->v, u->w) with v's
+    key below w's, closed by the oriented edge (v->w).
+
+    Returns ``(deg, tri)``: the degree frame ``(id, deg)`` and the
+    triangles ``(u, v, w)``. Shuffles: one map-combined degree agg, two
+    keyed joins hanging the degrees on the edges, the wedge self-join
+    and the closure probe. The degree frame (both keyed joins and the
+    caller) and the oriented frame (both wedge sides and the probe) are
+    each read more than once, so each is a lazy localCheckpoint,
+    materialized by the first job that reads it."""
+    deg = (
+        _endpoints(e, "a", "b")
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint(eager=False)
+    )
+    keyed = (
+        e.join(deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), "a")
+        .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), "b")
+        .select(
+            "a",
+            "b",
+            F.struct(F.col("da").alias("d"), F.col("a").alias("i")).alias("ka"),
+            F.struct(F.col("db").alias("d"), F.col("b").alias("i")).alias("kb"),
+        )
+    )
+    fwd = F.col("ka") < F.col("kb")
+    oriented = keyed.select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
+        F.when(fwd, F.col("kb")).otherwise(F.col("ka")).alias("kdst"),
+    ).localCheckpoint(eager=False)
+    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
+    tri = (
+        o1.join(
+            o2,
+            (F.col("o1.src") == F.col("o2.src"))
+            & (F.col("o1.kdst") < F.col("o2.kdst")),
+        )
+        .select(
+            F.col("o1.src").alias("u"),
+            F.col("o1.dst").alias("v"),
+            F.col("o2.dst").alias("w"),
+        )
+        .join(
+            oriented,
+            (F.col("v") == F.col("src")) & (F.col("w") == F.col("dst")),
+        )
+        .select("u", "v", "w")
+    )
+    return deg, tri
 
 
 def normalized_md5(text: Column | str) -> Column:
@@ -265,6 +340,16 @@ def jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    return _jaccard_tail(inter, sizes, threshold)
+
+
+def _jaccard_tail(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """``(id_a, id_b, inter, jaccard)`` for the pairs of ``inter``
+    ``(id_a, id_b, inter)`` with jaccard >= ``threshold``:
+    |A| and |B| from the size table ``(id, sz)``, jaccard =
+    inter / (|A| + |B| - inter) at 6dp."""
     return (
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
@@ -459,23 +544,8 @@ def _verify_jaccard(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out_cols = (
-        ["id_a", "id_b", "inter", "jaccard"]
-        if include_inter
-        else ["id_a", "id_b", "jaccard"]
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(*out_cols)
-    )
+    out = _jaccard_tail(inter, sizes, threshold)
+    return out if include_inter else out.drop("inter")
 
 
 def minhash_incremental_pairs(
@@ -775,9 +845,8 @@ def connected_components(
     # hash(src) once and labels on hash(id) (localCheckpoint preserves
     # outputPartitioning) makes the per-round join exchange-free; only
     # the groupBy(dst) still shuffles — 1 exchange per round. AQE is
-    # paused for the loop below 1M nodes (the pagerank "auto"
-    # discipline: replanning dominates node-frame jobs at that size)
-    # so runtime coalescing cannot break the co-partitioning.
+    # paused for the loop below 1M nodes (session._loop_aqe) so runtime
+    # coalescing cannot break the co-partitioning.
     spark = edges.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200)
     sym = (
@@ -789,11 +858,7 @@ def connected_components(
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("lbl"))
     labels = labels.repartition(n_parts, "id").localCheckpoint(eager=True)
     n_nodes = labels.count()  # cheap on the materialized checkpoint
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.enabled", str(n_nodes >= 1_000_000).lower()
-    )
-    try:
+    with _loop_aqe(spark, n_nodes):
         for _ in range(max_iter):
             nbr_min = (
                 labels.join(sym, labels["id"] == sym["src"])
@@ -826,8 +891,6 @@ def connected_components(
                 f"{max_iter} iterations (component diameter exceeds it); "
                 "raise max_iter"
             )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     sym.unpersist()
     return labels.select("id", F.col("lbl").alias("cluster"))
 
@@ -1535,7 +1598,6 @@ def pagerank(
     max_iter: int = 40,
     tol: float | None = 1e-6,
     directed: bool = False,
-    adaptive: bool | str = "auto",
 ) -> DataFrame:
     """PageRank over an edge list (Brin & Page 1998, public) — the
     centrality companion to :func:`connected_components` for graph-based
@@ -1568,13 +1630,8 @@ def pagerank(
     scaled-integer OUTPUT rounding is the attested contract
     (pagerank_parts, graph_pagerank).
 
-    ``adaptive``: AQE re-plans every iteration job; for a small rank
-    state the replanning dominates the work (measured ~1.5x on the
-    300-node gate graph). "auto" (default) disables AQE for the loop —
-    restoring the prior setting after — when the node count is under
-    1M, where per-iteration skew handling cannot matter; True/False
-    force it. At 100 TB the rank state is billions of rows and AQE's
-    skew handling earns its replanning cost: auto leaves it on.
+    AQE is off for the loop below 1M nodes and on above it
+    (``session._loop_aqe``); the prior setting is restored after.
     Convergence = L1 delta < tol, loud failure on exhausting max_iter.
     """
     if directed:
@@ -1593,14 +1650,7 @@ def pagerank(
     ranks = ranks.localCheckpoint(eager=True)
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    spark = edges.sparkSession
-    if adaptive == "auto":
-        use_aqe = n_count >= 1_000_000
-    else:
-        use_aqe = bool(adaptive)
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", str(use_aqe).lower())
-    try:
+    with _loop_aqe(edges.sparkSession, n_count):
         delta = float("inf")
         out = ranks.join(deg, ranks["id"] == deg["src"], "left").select(
             "id", "rank", F.coalesce("deg", F.lit(0)).alias("deg")
@@ -1660,8 +1710,6 @@ def pagerank(
                     f"iterations (last L1 delta {delta:.2e}); raise "
                     "max_iter or tol"
                 )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     sym.unpersist()
     n.unpersist()
     return out.select("id", F.round("rank", 9).alias("rank"))
@@ -1674,7 +1722,6 @@ def label_propagation(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 20,
-    adaptive: bool | str = "auto",
 ) -> DataFrame:
     """Synchronous label propagation communities (Raghavan et al. 2007,
     public) — the community detector between connected_components
@@ -1692,26 +1739,18 @@ def label_propagation(
     (labels x symmetrized edges) + two map-side-combined aggs (vote
     count, then max_by per node), all shuffles keyed by node id; ONE
     scalar action per round returns the changed-count and materializes
-    a non-eager localCheckpoint. AQE auto-disabled under 1M nodes
-    (replanning dominates tiny per-round jobs), restored after.
+    a non-eager localCheckpoint. AQE off under 1M nodes
+    (``session._loop_aqe``), restored after.
     Synchronous LPA can oscillate with period 2 on bipartite
     structures: the loop stops on changed == 0 OR max_iter — hitting
     max_iter is a valid stop (labels are still a usable community
     assignment), not an error, per the published algorithm.
     """
     sym = _sym_edges(edges, a_col, b_col).distinct().persist()
-    spark = edges.sparkSession
     labels = nodes.select(
         F.col(id_col).alias("id"), F.col(id_col).cast("long").alias("lbl")
     ).localCheckpoint(eager=True)
-    n_count = labels.count()
-    if adaptive == "auto":
-        use_aqe = n_count >= 1_000_000
-    else:
-        use_aqe = bool(adaptive)
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", str(use_aqe).lower())
-    try:
+    with _loop_aqe(edges.sparkSession, labels.count()):
         for _ in range(max_iter):
             votes = (
                 labels.join(sym, labels["id"] == sym["src"])
@@ -1741,37 +1780,8 @@ def label_propagation(
             labels = nxt.select("id", F.col("new_lbl").alias("lbl"))
             if not changed:
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     sym.unpersist()
     return labels.select("id", F.col("lbl").alias("community"))
-
-
-def label_propagation_reference(
-    edge_list: list[tuple], node_ids: list, max_iter: int = 20
-) -> dict:
-    """Driver-only reference of the SAME synchronous min-tie rule (the
-    test oracle)."""
-    from collections import Counter, defaultdict
-
-    adj = defaultdict(set)
-    for a, b in edge_list:
-        adj[a].add(b)
-        adj[b].add(a)
-    lbl = {n: n for n in node_ids}
-    for _ in range(max_iter):
-        new = {}
-        for n in node_ids:
-            if not adj[n]:
-                new[n] = lbl[n]
-                continue
-            counts = Counter(lbl[m] for m in adj[n])
-            top = max(counts.values())
-            new[n] = min(l for l, c in counts.items() if c == top)
-        if new == lbl:
-            break
-        lbl = new
-    return lbl
 
 
 def basket_pairs(
@@ -1832,61 +1842,21 @@ def triangle_count(
 ) -> DataFrame:
     """Exact triangle census of an undirected graph — the classic
     distributed formulation (degree-ordered edge orientation, the
-    MapReduce algorithm of Suri & Vassilvitskii 2011, public): orient
-    every edge from its lower-(degree, id) endpoint to the higher one,
-    so the oriented out-degree is O(sqrt(m)) for ANY degree
-    distribution — the hub node that would generate deg^2 wedges in a
-    naive formulation generates almost none, because nearly all its
-    edges point INTO it. Each triangle is then counted exactly once as
-    a wedge (u->v, u->w) closed by the oriented edge (v->w).
-
-    Shuffles: a degree agg (map-combined), two bounded joins keyed on
-    node ids (wedge generation + closure). Self-loops dropped,
-    duplicate/reversed edges collapsed, so multigraph inputs are safe.
+    MapReduce algorithm of Suri & Vassilvitskii 2011, public; the pass
+    is :func:`_triangles`), which counts each triangle exactly once with
+    an oriented out-degree of O(sqrt(m)) for ANY degree distribution.
+    Self-loops dropped, duplicate/reversed edges collapsed, so
+    multigraph inputs are safe.
 
     Output: ONE row — n_nodes, n_edges, n_triangles, n_wedges
     (undirected paths of length 2) and global_clustering
     (3*triangles/wedges, 6dp; 0 when wedge-free).
     """
-    e = (
-        edges.filter(F.col(a_col) != F.col(b_col))
-        .select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .distinct()
-        # r17: e feeds deg, keyed and the edge count — 3+ scans of the
-        # caller's (often join-built) lineage without a checkpoint
-        # (the degree_assortativity multi-consumer discipline)
-        .localCheckpoint(eager=False)
-    )
-    deg = _endpoints(e, "a", "b").groupBy("id").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=False)  # feeds both keyed joins + counts
-    keyed = (
-        e.join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "deg_a"), "a")
-        .join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "deg_b"), "b")
-        .select(
-            "a", "b",
-            F.struct(F.col("deg_a").alias("d"), F.col("a").alias("i")).alias("ka"),
-            F.struct(F.col("deg_b").alias("d"), F.col("b").alias("i")).alias("kb"),
-        )
-    )
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kdst"),
-    )
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2,
-        (F.col("o1.src") == F.col("o2.src"))
-        & (F.col("o1.kdst") < F.col("o2.kdst")),
-    ).select(F.col("o1.dst").alias("v"), F.col("o2.dst").alias("w"))
-    closed = wedges.join(
-        oriented,
-        (F.col("v") == F.col("src")) & (F.col("w") == F.col("dst")),
-    )
+    # r17: e feeds the triangle pass and the edge count — several
+    # scans of the caller's (often join-built) lineage without a
+    # checkpoint (the degree_assortativity multi-consumer discipline)
+    e = _simple_edges(edges, a_col, b_col).localCheckpoint(eager=False)
+    deg, closed = _triangles(e)
     tri = closed.agg(F.count(F.lit(1)).alias("n_triangles"))
     counts = (
         deg.agg(
@@ -2382,14 +2352,7 @@ def link_prediction(
     Output: a_col, b_col (a < b), common_neighbors,
     adamic_adar (6dp), jaccard (6dp).
     """
-    e = (
-        edges.filter(F.col(a_col) != F.col(b_col))
-        .select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .distinct()
-    )
+    e = _simple_edges(edges, a_col, b_col)
     # r17: one scan of the edge lineage for both directions, and a lazy
     # checkpoint — adj feeds the degree agg AND both self-join sides
     adj = _sym_edges(e, "a", "b", out_a="w", out_b="u").localCheckpoint(
@@ -2522,7 +2485,6 @@ def hits_scores(
     a_col: str = "id_a",
     b_col: str = "id_b",
     iters: int = 20,
-    adaptive: bool | str = "auto",
     quantize_dp: int | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, public) on a DIRECTED
@@ -2551,9 +2513,8 @@ def hits_scores(
 
     Runs EXACTLY ``iters`` rounds — deterministic and replayable (no
     float-threshold early stop; HITS converges geometrically, 20
-    rounds is the standard choice). AQE handling mirrors pagerank:
-    re-planning dominates sub-1M-node loops, so "auto" disables it
-    below that and restores the prior setting after.
+    rounds is the standard choice). AQE handling mirrors pagerank
+    (``session._loop_aqe``).
 
     ``quantize_dp``: when set, the init vector and every round's
     normalized scores are rounded to that many decimals — the
@@ -2579,76 +2540,69 @@ def hits_scores(
         .persist()
     )
     n_count = nodes.count()
-    spark = edges.sparkSession
     if n_count == 0:
         e.unpersist()
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
-    if adaptive == "auto":
-        use_aqe = n_count >= 1_000_000
-    else:
-        use_aqe = bool(adaptive)
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", str(use_aqe).lower())
     try:
-        init = 1.0 / (n_count ** 0.5)
-        if quantize_dp is not None:
-            # scaled-integer quantization (see pagerank): integer
-            # rounding is engine-portable, fractional round() is not
-            init = math.floor(init * 10.0 ** quantize_dp + 0.5) / (
-                10.0 ** quantize_dp
-            )
-        scores = nodes.select(
-            "node", F.lit(init).alias("h"), F.lit(init).alias("a")
-        ).localCheckpoint(eager=True)
-        for _ in range(iters):
-            a_raw = (
-                e.join(
-                    scores.select(F.col("node").alias("src"), "h"), "src"
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("h").alias("a_raw"))
-            )
-            h_raw = (
-                e.join(
-                    a_raw.select(F.col("node").alias("dst"), "a_raw"),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("a_raw").alias("h_raw"))
-            )
-            joined = (
-                nodes.join(a_raw, "node", "left")
-                .join(h_raw, "node", "left")
-                .na.fill({"a_raw": 0.0, "h_raw": 0.0})
-                .localCheckpoint(eager=False)
-            )
-            # ONE action per round: materializes the checkpoint above
-            # and returns both L2 norms as scalars
-            row = joined.agg(
-                F.sqrt(F.sum(F.col("h_raw") * F.col("h_raw"))).alias("_nh"),
-                F.sqrt(F.sum(F.col("a_raw") * F.col("a_raw"))).alias("_na"),
-            ).first()
-            nh, na = row[0] or 0.0, row[1] or 0.0
-            h_new = F.col("h_raw") / F.lit(nh) if nh else F.lit(0.0)
-            a_new = F.col("a_raw") / F.lit(na) if na else F.lit(0.0)
+        with _loop_aqe(edges.sparkSession, n_count):
+            init = 1.0 / (n_count ** 0.5)
             if quantize_dp is not None:
-                _sc = F.lit(10.0 ** quantize_dp)
-                h_new = F.round(h_new * _sc, 0) / _sc
-                a_new = F.round(a_new * _sc, 0) / _sc
-            scores = joined.select(
-                "node", h_new.alias("h"), a_new.alias("a")
-            )
-        return scores.select(
-            "node",
-            F.round("h", 6).alias("hub"),
-            F.round("a", 6).alias("authority"),
-        )
+                # scaled-integer quantization (see pagerank): integer
+                # rounding is engine-portable, fractional round() is not
+                init = math.floor(init * 10.0 ** quantize_dp + 0.5) / (
+                    10.0 ** quantize_dp
+                )
+            scores = nodes.select(
+                "node", F.lit(init).alias("h"), F.lit(init).alias("a")
+            ).localCheckpoint(eager=True)
+            for _ in range(iters):
+                a_raw = (
+                    e.join(
+                        scores.select(F.col("node").alias("src"), "h"), "src"
+                    )
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum("h").alias("a_raw"))
+                )
+                h_raw = (
+                    e.join(
+                        a_raw.select(F.col("node").alias("dst"), "a_raw"),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("node"))
+                    .agg(F.sum("a_raw").alias("h_raw"))
+                )
+                joined = (
+                    nodes.join(a_raw, "node", "left")
+                    .join(h_raw, "node", "left")
+                    .na.fill({"a_raw": 0.0, "h_raw": 0.0})
+                    .localCheckpoint(eager=False)
+                )
+                # ONE action per round: materializes the checkpoint above
+                # and returns both L2 norms as scalars
+                row = joined.agg(
+                    F.sqrt(F.sum(F.col("h_raw") * F.col("h_raw"))).alias("_nh"),
+                    F.sqrt(F.sum(F.col("a_raw") * F.col("a_raw"))).alias("_na"),
+                ).first()
+                nh, na = row[0] or 0.0, row[1] or 0.0
+                h_new = F.col("h_raw") / F.lit(nh) if nh else F.lit(0.0)
+                a_new = F.col("a_raw") / F.lit(na) if na else F.lit(0.0)
+                if quantize_dp is not None:
+                    _sc = F.lit(10.0 ** quantize_dp)
+                    h_new = F.round(h_new * _sc, 0) / _sc
+                    a_new = F.round(a_new * _sc, 0) / _sc
+                scores = joined.select(
+                    "node", h_new.alias("h"), a_new.alias("a")
+                )
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
         e.unpersist()
         nodes.unpersist()
+    return scores.select(
+        "node",
+        F.round("h", 6).alias("hub"),
+        F.round("a", 6).alias("authority"),
+    )
 
 
 def degree_assortativity(
@@ -2677,32 +2631,23 @@ def degree_assortativity(
     max_degree, assortativity (6dp; NULL for degree-regular graphs,
     where the correlation is 0/0 — documented, matches networkx NaN).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .filter(F.col("_u").isNotNull() & F.col("_v").isNotNull())
-        .distinct()
-        # the canonical edge frame feeds the degree agg, BOTH degree
-        # joins and both orientations — without a checkpoint every
-        # consumer re-derives it from the caller's (possibly
-        # join-built) lineage; first audit showed 24 source scans
-        # (the k_core multi-consumer discipline; lazy — materialized
-        # by the first action)
-        .localCheckpoint(eager=False)
-    )
+    # the canonical edge frame feeds the degree agg, BOTH degree
+    # joins and both orientations — without a checkpoint every
+    # consumer re-derives it from the caller's (possibly join-built)
+    # lineage; first audit showed 24 source scans (the k_core
+    # multi-consumer discipline; lazy — materialized by the first
+    # action)
+    e = _simple_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
     deg = (
-        _endpoints(e, "_u", "_v", out="_n")
+        _endpoints(e, "a", "b", out="_n")
         .groupBy("_n")
         .agg(F.count(F.lit(1)).alias("_d"))
         .localCheckpoint(eager=False)
     )
     both = e.join(
-        deg.select(F.col("_n").alias("_u"), F.col("_d").alias("_du")), "_u"
+        deg.select(F.col("_n").alias("a"), F.col("_d").alias("_du")), "a"
     ).join(
-        deg.select(F.col("_n").alias("_v"), F.col("_d").alias("_dv")), "_v"
+        deg.select(F.col("_n").alias("b"), F.col("_d").alias("_dv")), "b"
     )
     directed = both.select(
         F.col("_du").cast("double").alias("_dx"),
@@ -2755,70 +2700,10 @@ def degree_assortativity(
 
 def _edge_support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support over a canonical (a < b) simple edge
-    frame: the Suri-Vassilvitskii degree-ordered orientation
-    enumerates each triangle once as a wedge closed by an oriented
-    edge (oriented out-degree O(sqrt(m)) for any degree distribution),
-    then every found triangle credits its THREE canonical edges via a
-    map-side explode. Edges in no triangle come back with support 0
-    (left join + coalesce). Shuffles: one degree agg, two keyed joins,
-    one edge-keyed count agg."""
-    deg = (
-        _endpoints(e, "a", "b")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    keyed = (
-        e.join(
-            deg.withColumnRenamed("id", "a").withColumnRenamed(
-                "deg", "deg_a"
-            ),
-            "a",
-        )
-        .join(
-            deg.withColumnRenamed("id", "b").withColumnRenamed(
-                "deg", "deg_b"
-            ),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            F.struct(
-                F.col("deg_a").alias("d"), F.col("a").alias("i")
-            ).alias("ka"),
-            F.struct(
-                F.col("deg_b").alias("d"), F.col("b").alias("i")
-            ).alias("kb"),
-        )
-    )
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a"))
-        .otherwise(F.col("b"))
-        .alias("src"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b"))
-        .otherwise(F.col("a"))
-        .alias("dst"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb"))
-        .otherwise(F.col("ka"))
-        .alias("kdst"),
-        # consumed THREE times (both wedge sides + the closure probe):
-        # without a checkpoint each consumer re-runs the degree agg and
-        # both joins every peel round (the assortativity audit lesson)
-    ).localCheckpoint(eager=False)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2,
-        (F.col("o1.src") == F.col("o2.src"))
-        & (F.col("o1.kdst") < F.col("o2.kdst")),
-    ).select(
-        F.col("o1.src").alias("u"),
-        F.col("o1.dst").alias("v"),
-        F.col("o2.dst").alias("w"),
-    )
-    closed = wedges.join(
-        oriented,
-        (F.col("v") == F.col("src")) & (F.col("w") == F.col("dst")),
-    ).select("u", "v", "w")
+    frame: every triangle of :func:`_triangles` credits its THREE
+    canonical edges via a map-side explode. Edges in no triangle come
+    back with support 0 (left join + coalesce)."""
+    _, closed = _triangles(e)
     contrib = closed.select(
         F.explode(
             F.array(
@@ -2869,9 +2754,10 @@ def k_truss(
     Scale design (the k_core round discipline): each round recomputes
     per-edge support with the degree-ordered oriented wedge
     enumeration (O(sqrt(m)) oriented out-degree regardless of hubs —
-    :func:`_edge_support`), filters, lazily localCheckpoints, and
-    spends ONE scalar action (the surviving-edge count, which also
-    materializes the checkpoint and keeps lineage flat). The edge set
+    :func:`_triangles` via :func:`_edge_support`), filters, lazily
+    localCheckpoints, and spends ONE scalar action (the surviving-edge
+    count, which also materializes the checkpoint and keeps lineage
+    flat). The edge set
     shrinks monotonically, so an unchanged count is the fixpoint, and
     peeling is idempotent there; ``max_iter`` caps pathological peel
     depth. ORACLE-replayable since r12: DuckDB permits joining the
@@ -2883,15 +2769,7 @@ def k_truss(
     if k < 2:
         raise ValueError(f"k_truss: k must be >= 2, got {k}")
     thresh = k - 2
-    e = (
-        edges.filter(F.col(a_col) != F.col(b_col))
-        .select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_edges(edges, a_col, b_col).localCheckpoint(eager=True)
     n_cur = e.count()
     sup = _edge_support(e)
     for _ in range(max_iter):
@@ -2928,7 +2806,7 @@ def clustering_coefficients(
     Simple-graph semantics (triangle_count's contract). Distributed
     shape: the canonical edge frame checkpoints once (multi-consumer
     discipline), triangles enumerate ONCE via the degree-ordered
-    oriented wedge join (O(sqrt(m)) oriented out-degree), then each
+    oriented wedge join (:func:`_triangles`), then each
     triangle credits its THREE nodes map-side and a node-keyed count
     joins back onto the degree frame — all keyed, nothing quadratic.
 
@@ -2937,75 +2815,9 @@ def clustering_coefficients(
     networkx reports 0 there, the NULL makes the undefinedness
     explicit and is documented).
     """
-    e = (
-        edges.filter(F.col(a_col) != F.col(b_col))
-        .select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        _endpoints(e, "a", "b", out="node")
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=False)
-    )
-    keyed = (
-        e.join(
-            deg.select(
-                F.col("node").alias("a"), F.col("degree").alias("da")
-            ),
-            "a",
-        )
-        .join(
-            deg.select(
-                F.col("node").alias("b"), F.col("degree").alias("db")
-            ),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            F.struct(F.col("da").alias("d"), F.col("a").alias("i")).alias(
-                "ka"
-            ),
-            F.struct(F.col("db").alias("d"), F.col("b").alias("i")).alias(
-                "kb"
-            ),
-        )
-    )
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a"))
-        .otherwise(F.col("b"))
-        .alias("src"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b"))
-        .otherwise(F.col("a"))
-        .alias("dst"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb"))
-        .otherwise(F.col("ka"))
-        .alias("kdst"),
-    ).localCheckpoint(eager=False)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    closed = (
-        o1.join(
-            o2,
-            (F.col("o1.src") == F.col("o2.src"))
-            & (F.col("o1.kdst") < F.col("o2.kdst")),
-        )
-        .select(
-            F.col("o1.src").alias("u"),
-            F.col("o1.dst").alias("v"),
-            F.col("o2.dst").alias("w"),
-        )
-        .join(
-            oriented,
-            (F.col("v") == F.col("src")) & (F.col("w") == F.col("dst")),
-        )
-        .select("u", "v", "w")
-    )
+    e = _simple_edges(edges, a_col, b_col).localCheckpoint(eager=False)
+    deg, closed = _triangles(e)
+    deg = deg.select(F.col("id").alias("node"), F.col("deg").alias("degree"))
     per_node = (
         closed.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")

@@ -59,6 +59,30 @@ def _write_state(df: DataFrame, path: str, batch_id: int) -> None:
     )
 
 
+def _swap_state(merged: DataFrame, state_path: str) -> None:
+    """Rewrite a whole state table with ``merged``, which may lazily
+    read that same table: land it in a staging dir first, then rewrite
+    the live path from the materialized staging copy."""
+    staging = state_path.rstrip("/") + "__staging"
+    merged.write.mode("overwrite").parquet(staging)
+    spark = merged.sparkSession
+    spark.read.parquet(staging).write.mode("overwrite").parquet(state_path)
+
+
+def _monitor_writer(
+    stream_df: DataFrame, on_batch, state_path: str, query_name: str
+):
+    """The monitors' unstarted sink: ``on_batch`` per micro-batch, the
+    checkpoint beside the state path, and an availableNow trigger
+    (drain what is available, then stop)."""
+    return (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .queryName(query_name)
+        .option("checkpointLocation", state_path.rstrip("/") + "__checkpoint")
+        .trigger(availableNow=True)
+    )
+
+
 def dedup_ingest_stream(
     stream_df: DataFrame,
     state_dir: str,
@@ -200,23 +224,9 @@ def quantile_monitor_stream(
             )
         except AnalysisException:
             merged = batch_sk
-        # write-stage-swap: the state frame is being read lazily while
-        # we overwrite, so land the merge in a staging dir first, then
-        # rewrite the live path from the materialized staging copy
-        staging = state_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(
-            state_path
-        )
+        _swap_state(merged, state_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def heavy_hitters_monitor_stream(
@@ -255,14 +265,7 @@ def heavy_hitters_monitor_stream(
         sk = cm_sketch_build(batch_df, key_col, width=width, depth=depth)
         _write_state(sk, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def cm_monitor_totals(spark: SparkSession, state_path: str) -> DataFrame:
@@ -324,20 +327,9 @@ def theta_monitor_stream(
             merged = theta_sketch_merge(state, batch_sk, group_cols, k=k)
         except AnalysisException:
             merged = batch_sk
-        staging = state_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(
-            state_path
-        )
+        _swap_state(merged, state_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def psi_monitor_stream(
@@ -375,14 +367,7 @@ def psi_monitor_stream(
         counts = psi_bucket_counts(batch_df, value_col, edges)
         _write_state(counts, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def psi_monitor_totals(
@@ -471,14 +456,7 @@ def mau_monitor_stream(
         )
         _write_state(daily, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def mau_monitor_totals(
@@ -563,14 +541,7 @@ def srm_monitor_stream(
         ).groupBy("variant").agg(F.count(F.lit(1)).alias("_n"))
         _write_state(counts, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def srm_monitor_totals(
@@ -747,14 +718,7 @@ def ewma_monitor_stream(
             st = st.unionByName(spark_quiet)
         _write_state(st, state_path.rstrip("/") + "/state", batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def ewma_monitor_points(spark: SparkSession, state_path: str) -> DataFrame:
@@ -835,14 +799,7 @@ def decay_mass_monitor_stream(
         )
         _write_state(part, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def decay_mass_totals(
@@ -920,14 +877,7 @@ def diversity_monitor_stream(
         )
         _write_state(counts, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .trigger(availableNow=True)
-    )
+    return _monitor_writer(stream_df, on_batch, state_path, query_name)
 
 
 def diversity_monitor_totals(

@@ -500,22 +500,72 @@ def test_interpolated_lm_logprob_orders_and_drops(spark):
     assert out[100]["avg_logprob"] < 0
 
 
-def test_pagerank_restores_aqe_conf(spark):
-    """pagerank auto-disables AQE for small graphs during its loop and
-    must restore the prior setting afterwards — including when it exits
-    via the non-convergence error."""
-    from indexlab_spark.operators.dedup import pagerank
-
-    prior = spark.conf.get("spark.sql.adaptive.enabled")
-    edges = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
-    nodes = spark.createDataFrame([(i,) for i in range(3)], "id long")
-    pagerank(edges, nodes, tol=1e-2, max_iter=60).count()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+def test_pagerank_restores_aqe_conf(spark, monkeypatch):
+    """The five driver-side loops (connected_components, pagerank,
+    label_propagation, hits_scores and train_bpe's distributed rounds)
+    pause AQE through session._loop_aqe and restore the prior setting
+    afterwards, including when they exit through an error. The pause
+    rule itself: off below 1M nodes, on at or above it, off without a
+    node count."""
     import pytest as _pytest
 
-    with _pytest.raises(RuntimeError):
-        pagerank(edges, nodes, tol=1e-12, max_iter=1)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+    from indexlab_spark.operators import bpe
+    from indexlab_spark.operators.dedup import (
+        connected_components,
+        hits_scores,
+        label_propagation,
+        pagerank,
+    )
+    from indexlab_spark.session import _loop_aqe
+
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(3)], "id long")
+
+    def restored(run, error=None):
+        if error is None:
+            run().count()
+        else:
+            with _pytest.raises(error):
+                run()
+        assert spark.conf.get(key) == prior
+
+    restored(lambda: pagerank(edges, nodes, tol=1e-2, max_iter=60))
+    restored(lambda: pagerank(edges, nodes, tol=1e-12, max_iter=1), RuntimeError)
+    restored(lambda: connected_components(edges, nodes))
+    # the path 0-1-2 needs two rounds to converge
+    restored(lambda: connected_components(edges, nodes, max_iter=1), RuntimeError)
+    restored(lambda: label_propagation(edges, nodes, max_iter=3))
+    restored(lambda: hits_scores(edges, iters=2))
+    restored(lambda: hits_scores(edges, iters=0), ValueError)
+
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_MAX", 0)  # the distributed loop
+    docs = spark.createDataFrame(
+        [(0, "aa ab"), (1, "aa ba")], "doc_id long, text string"
+    )
+    assert bpe.train_bpe(docs, n_merges=2)
+    assert spark.conf.get(key) == prior
+
+    def failing_merge(left, right):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(bpe, "_make_merge", failing_merge)
+    restored(lambda: bpe.train_bpe(docs, n_merges=2), RuntimeError)
+
+    spark.conf.set(key, "false")
+    try:
+        with _loop_aqe(spark, 999_999):
+            assert spark.conf.get(key) == "false"
+        with _loop_aqe(spark, 1_000_000):
+            assert spark.conf.get(key) == "true"
+        assert spark.conf.get(key) == "false"
+        spark.conf.set(key, "true")
+        with _loop_aqe(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_train_bpe_matches_pure_python_reference(spark, tables):
@@ -619,6 +669,33 @@ def test_exact_dedup_incremental_matches_batch_rebuild(spark, tables):
         assert r["dup_of"] < r["id"]
 
 
+def label_propagation_reference(
+    edge_list: list[tuple], node_ids: list, max_iter: int = 20
+) -> dict:
+    """Driver-only reference of label_propagation's synchronous min-tie
+    rule (the test oracle)."""
+    from collections import Counter, defaultdict
+
+    adj = defaultdict(set)
+    for a, b in edge_list:
+        adj[a].add(b)
+        adj[b].add(a)
+    lbl = {n: n for n in node_ids}
+    for _ in range(max_iter):
+        new = {}
+        for n in node_ids:
+            if not adj[n]:
+                new[n] = lbl[n]
+                continue
+            counts = Counter(lbl[m] for m in adj[n])
+            top = max(counts.values())
+            new[n] = min(l for l, c in counts.items() if c == top)
+        if new == lbl:
+            break
+        lbl = new
+    return lbl
+
+
 def test_label_propagation_matches_reference_and_finds_communities(spark):
     """Two dense cliques joined by one bridge edge: LPA converges to two
     communities (where connected_components sees ONE component); the
@@ -627,7 +704,6 @@ def test_label_propagation_matches_reference_and_finds_communities(spark):
     from indexlab_spark.operators.dedup import (
         connected_components,
         label_propagation,
-        label_propagation_reference,
     )
 
     c1 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
