@@ -8248,7 +8248,7 @@ def _wminhash_sql(
     weighted-Jaccard verify is integer arithmetic. Gate corpus:
     31-term vocabulary, space-only whitespace (tokenization parity
     with str.split() verified)."""
-    rpb = max(1, num_hashes // bands)
+    rpb = num_hashes // bands
     return f"""
         WITH hexmap AS MATERIALIZED (
             SELECT chr(CAST(48 + g.i AS INTEGER)) AS c,

@@ -57,40 +57,3 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
         F.size(toks) >= n, F.array_distinct(grams)
     ).otherwise(F.array().cast("array<string>"))
 
-
-def minhash_signature(shingles_col: Column | str, num_hashes: int) -> Column:
-    """MinHash signature: per seed, min md5 hex over the shingle set.
-
-    array<string> of length num_hashes; empty shingle set -> nulls.
-    """
-    sh = _c(shingles_col)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, i=i: F.md5(F.concat(F.lit(f"{i}|"), s))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def band_keys(signature_col: Column | str, bands: int, rows: int) -> Column:
-    """LSH banding: md5 of each band's concatenated signature slice.
-
-    array<string> of length ``bands``; docs sharing ANY band key are
-    near-dup candidates (standard MinHash-LSH banding).
-
-    A signature containing nulls (minhash_signature's empty-shingle
-    output for too-short docs) yields NULL band keys, not md5('') —
-    array_join skips nulls, so every short doc would otherwise share
-    identical keys in every band and the m short docs of a corpus would
-    become O(m^2) mutual candidates. NULL keys never equi-join, which is
-    the correct "no shingles, no candidates" semantics.
-    """
-    sig = _c(signature_col)
-
-    def _band(b: int) -> Column:
-        sl = F.slice(sig, b * rows + 1, rows)
-        return F.when(
-            F.exists(sl, lambda x: x.isNull()), F.lit(None).cast("string")
-        ).otherwise(F.md5(F.array_join(sl, "|")))
-
-    return F.array(*[_band(b) for b in range(bands)])

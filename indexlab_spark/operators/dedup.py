@@ -11,10 +11,10 @@ Five strategies, each returning DataFrames a 100 TB pipeline can act on:
               bucket^2), controlled by bands x rows; verification joins
               shingles only for candidates. This is the scale path for
               near-dup text.
-- simhash:    32-bit sign-aggregated fingerprint; hamming<=r candidate
-              pairs via byte-band self-join (4 bands of 8 bits — two
-              equal bytes guarantee hamming<=16; exact hamming filter
-              after). Cheap fingerprints, fixed-width state.
+- simhash:    60-bit sign-aggregated fingerprint; candidate pairs via
+              band self-join (4 bands of 15 bits — by pigeonhole a pair
+              within hamming <= nbands-1 shares a band; exact hamming
+              filter after). Cheap fingerprints, fixed-width state.
 - n-gram jaccard: exact pairwise jaccard via shingle equi-join — only
               pairs sharing >=1 shingle materialize. Quadratic in the
               worst case; use on candidate sets or small corpora.
@@ -24,11 +24,19 @@ Five strategies, each returning DataFrames a 100 TB pipeline can act on:
 
 All hashing is md5-based (functions/hashing.py) so every strategy is
 expressible 1:1 in the DuckDB oracle.
+
+The banded operators (minhash, incremental minhash, simhash, weighted
+minhash, embedding LSH) share one banding kernel: :func:`_grams` for
+the text tokenize contract, :func:`_band_rows` for the ``(id, band,
+key)`` rows, :func:`_hot_buckets` for the overfull-bucket guard and
+:func:`_bucket_pairs` for the ``(band, key)`` candidate self-join.
+Each family keeps its own band-key expression, which its oracle replays.
 """
 
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -259,56 +267,41 @@ def exact_dedup_incremental(
     )
 
 
-def with_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
-    drop_empty: bool = False,
-) -> DataFrame:
-    from indexlab_spark.functions.hashing import shingles_from_tokens
+# JVM/RE2 ``\s`` is ASCII-only: the same class here keeps build- and
+# query-side tokens (and the SQL oracle's) identical
+_WS = re.compile(r"\s+", re.ASCII)
 
-    # two-step: materialize the token array as a column FIRST — inlining
-    # the tokenize into the shingle transform re-evaluates the regex
-    # split per shingle index (no CSE inside lambdas; measured 10x).
-    # drop_empty filters on TOKEN COUNT, not size(shingles): a filter on
-    # the shingle column gets pushed below the projection and re-inlines
-    # the whole shingle expression into the predicate.
-    df = _spread(df)
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "").alias("_toks"),
-    )
-    if drop_empty:
-        toks = toks.filter(F.size("_toks") >= n)
-    return toks.select("id", shingles_from_tokens(F.col("_toks"), n).alias("shingles"))
+
+def _grams(text: str | None, n: int) -> set:
+    """The distinct word n-grams of one document — THE tokenize contract
+    of the text LSH family and its oracle: lowercase, split on ASCII
+    whitespace, drop empty tokens. Empty below ``n`` tokens (NULL text
+    included), so such a document gets no shingles and no signature."""
+    toks = [x for x in _WS.split((text or "").lower()) if x]
+    return {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
 
 
 def exploded_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """(id, shingle) rows — DISTINCT word n-grams per doc, via one Arrow
-    mapInPandas pass.
+    """(id, shingle) rows — DISTINCT word n-grams per doc (:func:`_grams`),
+    via one Arrow mapInPandas pass.
 
-    Semantically identical to exploding ``with_shingles`` but ~5x
-    faster: the Catalyst sequence/transform/slice/array_distinct lambda
-    chain allocates per shingle, while a Python set over tokens runs at
-    string speed inside one Arrow batch. Same tokenize contract as the
-    oracle (lower, split \\s+, drop empties).
+    Semantically identical to exploding ``hashing.token_shingles`` but
+    ~5x faster: the Catalyst sequence/transform/slice/array_distinct
+    lambda chain allocates per shingle, while a Python set over tokens
+    runs at string speed inside one Arrow batch.
     """
-    import re as _re
-
     import pandas as pd
-
-    ws = _re.compile(r"\s+", _re.ASCII)  # match JVM/RE2 \s (ASCII-only) so build- and query-side tokens agree
 
     def _gen(batches):
         for pdf in batches:
             ids: list = []
             shs: list = []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = [x for x in ws.split((t or "").lower()) if x]
-                if len(toks) >= n:
-                    grams = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
-                    ids.extend([i] * len(grams))
-                    shs.extend(grams)
+                grams = _grams(t, n)
+                ids.extend([i] * len(grams))
+                shs.extend(grams)
             yield pd.DataFrame({"id": ids, "shingle": shs})
 
     src = _spread(df.select(id_col, text_col))
@@ -365,7 +358,9 @@ def _jaccard_tail(
 
 
 def _check_banding(num_hashes: int, bands: int) -> int:
-    if bands < 1 or num_hashes % bands != 0:
+    """Rows per band of a signature of ``num_hashes`` values split into
+    ``bands`` bands; every banded operator checks its split here."""
+    if bands < 1 or num_hashes < bands or num_hashes % bands != 0:
         # bands > num_hashes would give rows=0 and a CONSTANT band key —
         # every doc collides and the "prune" silently degenerates to the
         # full quadratic cross join; a non-divisible remainder computes
@@ -376,6 +371,61 @@ def _check_banding(num_hashes: int, bands: int) -> int:
             f"bands={bands}"
         )
     return num_hashes // bands
+
+
+def _band_rows(sigs: DataFrame, keys: Column, carry: tuple = ()) -> DataFrame:
+    """``(id, *carry, band, key)``: one row per band of every signature
+    row of ``sigs``, from the array column ``keys`` of its band keys;
+    ``band`` is the int position of the key in that array."""
+    return sigs.select(
+        "id", *carry, F.posexplode(keys).alias("band", "key")
+    )
+
+
+def _hot_buckets(rows: DataFrame, max_bucket: int) -> DataFrame:
+    """The ``(band, key)`` buckets of the band rows ``rows`` with more
+    than ``max_bucket`` members, hinted for broadcast: callers drop them
+    with a left-anti join before the candidate self-join.
+
+    A degenerate band key (boilerplate text repeated across a slice of
+    the corpus, zero vectors, a constant-embedding cluster) makes one
+    bucket whose pair count is O(occupancy^2) however wide the band is.
+    Hot keys number at most rows/max_bucket, so the frame is
+    broadcast-sized. The guard is lazy: the count folds into the
+    candidate join's own plan (an agg on the same (band, key) the
+    self-join shuffles on) and an empty hot frame makes the anti-join a
+    runtime no-op. An eager pin + count cost extra jobs on every call
+    (+63% on clean corpora)."""
+    return F.broadcast(
+        rows.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("_occ"))
+        .filter(F.col("_occ") > max_bucket)
+        .select("band", "key")
+    )
+
+
+def _bucket_pairs(
+    probe: DataFrame, build: DataFrame, carry: tuple = ()
+) -> DataFrame:
+    """Distinct candidate pairs ``(id_a, id_b, *{c}_a, *{c}_b)`` with
+    ``id_a < id_b``: a row of ``probe`` and a row of ``build`` that
+    share a ``(band, key)``, carrying the columns ``carry`` of each
+    side."""
+    def side(s):
+        return [F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry]
+
+    return (
+        probe.alias("a")
+        .join(build.alias("b"), ["band", "key"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *side("a"),
+            *side("b"),
+        )
+        .distinct()
+    )
 
 
 def minhash_signatures(
@@ -403,7 +453,6 @@ def minhash_signatures(
 
     import pandas as pd
 
-    ws = __import__("re").compile(r"\s+", __import__("re").ASCII)  # JVM \s parity
     id_t = df.schema[id_col].dataType.simpleString()
 
     def _sigs(batches):
@@ -421,10 +470,9 @@ def minhash_signatures(
         for pdf in batches:
             out = {c: [] for c in ["id", "sz", *[f"m{i}" for i in range(num_hashes)]]}
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = [x for x in ws.split((t or "").lower()) if x]
-                if len(toks) < n:
+                grams = _grams(t, n)
+                if not grams:
                     continue
-                grams = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
                 out["id"].append(i)
                 out["sz"].append(len(grams))
                 rows = []
@@ -465,7 +513,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    materialize: bool = True,
     max_bucket: int | None = 100_000,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, verified with exact Jaccard.
@@ -476,54 +523,25 @@ def minhash_lsh_pairs(
     1-(1-j^r)^b — b=4, r=4 keeps j>=0.7 pairs with P>~0.93 while pruning
     the low-similarity mass that makes all-pairs quadratic.
 
-    ``materialize`` persists the exploded shingle frame — it feeds the
-    signature, both verify sides and the size table, and without the
-    cache each branch re-runs tokenize+shingle over the corpus. At very
-    large scale write it to a bucketed table instead.
+    ``max_bucket`` drops (band, key) buckets with more members from
+    candidate generation (:func:`_hot_buckets`). A group of IDENTICAL
+    texts is hot in ALL its bands at once, so its pairs are not
+    recoverable via other bands — run exact_dedup first (one shuffle,
+    and it catches exactly those); this operator's contract is
+    NEAR-duplicates. None disables the guard.
     """
     _check_banding(num_hashes, bands)
-    exploded = exploded_shingles(df, id_col, text_col, n)
-    if materialize:
-        exploded = _pin(exploded)
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
-    if materialize:
-        sig = _pin(sig)
-    buckets = sig.select(
-        "id",
-        F.posexplode(F.array(*_band_key_cols(num_hashes, bands))).alias(
-            "band", "key"
-        ),
-    )
+    # the shingle frame feeds both verify sides, the signature frame the
+    # band rows and the size table: without the pins each branch re-runs
+    # tokenize+shingle over the corpus
+    exploded = _pin(exploded_shingles(df, id_col, text_col, n))
+    sig = _pin(minhash_signatures(df, id_col, text_col, n, num_hashes))
+    buckets = _band_rows(sig, F.array(*_band_key_cols(num_hashes, bands)))
     if max_bucket is not None:
-        # Overfull-bucket guard (same policy as embedding_lsh_pairs): a
-        # degenerate band key — boilerplate text repeated across a huge
-        # slice of the corpus — makes the self-join below O(occupancy^2)
-        # in that one bucket regardless of bands x rows. Hot keys number
-        # at most n_rows*bands/max_bucket — broadcast-sized. NOTE: a
-        # group of IDENTICAL texts is hot in ALL its bands at once, so
-        # its pairs are not recoverable via other bands — run exact_dedup
-        # first (it is one shuffle and catches exactly those); this
-        # operator's contract is NEAR-duplicates.
-        #
-        # The guard is LAZY (r5 VERDICT: the old eager pin + hot.count()
-        # cost two extra jobs on every call, +63% on clean corpora): the
-        # anti-join folds into the candidate join's own plan — an agg on
-        # the SAME (band, key) the self-join shuffles on — and an empty
-        # hot frame makes it a runtime no-op.
-        hot = (
-            buckets.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > max_bucket)
-            .select("band", "key")
+        buckets = buckets.join(
+            _hot_buckets(buckets, max_bucket), ["band", "key"], "left_anti"
         )
-        buckets = buckets.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(buckets, buckets)
     # exact-jaccard verification restricted to CANDIDATES only — the full
     # shingle self-join would be the quadratic blowup LSH exists to avoid
     return _verify_jaccard(cand, exploded, sig.select("id", "sz"), threshold)
@@ -603,44 +621,33 @@ def minhash_incremental_pairs(
         new_sigs = _pin(
             minhash_signatures(new_df, id_col, text_col, n, num_hashes)
         )
-    band_cols = _band_key_cols(num_hashes, bands)
-
-    def _buckets(s):
-        return s.select(
-            "id", "sz", F.posexplode(F.array(*band_cols)).alias("band", "key")
-        )
-
-    new_b = _pin(_buckets(new_sigs).withColumn("is_new", F.lit(True)))
+    keys = F.array(*_band_key_cols(num_hashes, bands))
+    new_b = _pin(_band_rows(new_sigs, keys).withColumn("is_new", F.lit(True)))
     all_b = _pin(
         new_b.unionByName(
-            _buckets(old_sigs).withColumn("is_new", F.lit(False))
+            _band_rows(old_sigs, keys).withColumn("is_new", F.lit(False))
         )
     )
     if max_bucket is not None:
-        # Lazy guard, same policy as minhash_lsh_pairs, but restricted
-        # to the BATCH's keys: a hot bucket with no new-side key never
-        # joins, so anti-filtering it is a no-op — which means hot
-        # detection only needs counts for keys the new batch touches.
-        # The unrestricted groupBy was the one corpus-sized SHUFFLE in
-        # the probe path (r11 postmortem of the incremental ratio);
-        # after the broadcast semi-join the count's input is
-        # candidate-mass-bounded and the corpus bucket table is only
-        # ever SCANNED, never shuffled. Result-identical by the
-        # argument above (per-key counts are unchanged by the key
-        # restriction).
+        # The guard counts only the keys the BATCH touches: a hot bucket
+        # with no new-side key never joins, so dropping it is a no-op,
+        # and per-key counts are unchanged by the key restriction. The
+        # unrestricted count was the one corpus-sized SHUFFLE in the
+        # probe path (r11 postmortem of the incremental ratio); after
+        # the broadcast semi-join its input is candidate-mass-bounded
+        # and the corpus bucket table is only ever SCANNED.
         new_keys = new_b.select("band", "key").distinct()
-        hot = (
-            all_b.join(F.broadcast(new_keys), ["band", "key"], "semi")
-            .groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > max_bucket)
-            .select("band", "key")
+        hot = _hot_buckets(
+            all_b.join(F.broadcast(new_keys), ["band", "key"], "semi"),
+            max_bucket,
         )
-        new_b = new_b.join(F.broadcast(hot), ["band", "key"], "left_anti")
-        all_b = all_b.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    # probe NEW keys against the combined buckets; normalize pair order
-    # afterwards so (new, old) and (new, new) pairs dedup identically to
-    # the batch operator's a.id < b.id convention
+        new_b = new_b.join(hot, ["band", "key"], "left_anti")
+        all_b = all_b.join(hot, ["band", "key"], "left_anti")
+    # probe NEW keys against the combined buckets: a new row may pair
+    # with an old row on either side of it in id order, so this join
+    # keeps a.id != b.id and normalizes the pair order afterwards —
+    # (new, old) and (new, new) pairs then dedup identically to the
+    # batch operator's a.id < b.id convention
     cand = (
         new_b.alias("a")
         .join(all_b.alias("b"), ["band", "key"])
@@ -688,12 +695,10 @@ def simhash(
     shingle stream for math that never needed to leave the partition.
     """
     import hashlib as _hashlib
-    import re as _re
 
     import numpy as np
     import pandas as pd
 
-    ws = _re.compile(r"\s+", _re.ASCII)  # match JVM/RE2 \s (ASCII-only) so build- and query-side tokens agree
     js = np.arange(bits, dtype=np.int64)
 
     def _fp(batches):
@@ -701,10 +706,9 @@ def simhash(
         for pdf in batches:
             ids, fps = [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = [x for x in ws.split((t or "").lower()) if x]
-                if len(toks) < n:
+                grams = _grams(t, n)
+                if not grams:
                     continue  # no shingles -> no fingerprint (parity with explode)
-                grams = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
                 h = np.array(
                     [int(md5(g.encode("utf-8")).hexdigest()[:15], 16) for g in grams],
                     dtype=np.int64,
@@ -722,7 +726,7 @@ def simhash(
 
 def simhash_pairs(
     simhash_df: DataFrame, max_hamming: int = 3, bits: int = 60,
-    nbands: int = 4, materialize: bool = True,
+    nbands: int = 4,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming.
 
@@ -735,9 +739,6 @@ def simhash_pairs(
     ~1e5 docs; 60/4 gives 32,768 buckets per band (128x), so expected
     bucket occupancy — and with it candidate-join fan-out — drops 128x at
     the same corpus size while keeping the same pigeonhole guarantee.
-
-    ``materialize`` persists the fingerprints: the band self-join
-    evaluates its input lineage twice otherwise.
     """
     if bits % nbands != 0:
         # a remainder leaves the top bits outside every band: pairs
@@ -751,42 +752,23 @@ def simhash_pairs(
             f"max_hamming={max_hamming} exceeds the pigeonhole guarantee "
             f"of nbands-1={nbands - 1}; raise nbands to cover it"
         )
-    if materialize:
-        simhash_df = _pin(simhash_df)
+    # the band self-join evaluates its input lineage twice otherwise
+    simhash_df = _pin(simhash_df)
     width = bits // nbands
     mask = (1 << width) - 1
-    banded = simhash_df.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * width)
-                        .bitwiseAND(mask)
-                        .alias("key"),
-                    )
-                    for b in range(nbands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
+    banded = _band_rows(
+        simhash_df,
+        F.array(*[
+            F.shiftright(F.col("simhash"), b * width).bitwiseAND(mask)
+            for b in range(nbands)
+        ]),
+        carry=("simhash",),
     )
     return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+        _bucket_pairs(banded, banded, carry=("simhash",))
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -964,7 +946,7 @@ def embedding_lsh_pairs(
       flip fan-out is the superlinear term at scale (see the constant's
       doc). Pass 1/0 to force it on/off.
     - ``max_bucket``: (band, key) buckets with more members than this
-      are dropped from candidate generation, with a loud stderr note. A
+      are dropped from candidate generation (:func:`_hot_buckets`). A
       degenerate key (all-zero vectors, a giant constant-embedding
       cluster) otherwise creates ONE bucket whose pair explosion is
       O(occupancy^2) regardless of r. Pairs inside a dropped bucket are
@@ -980,10 +962,8 @@ def embedding_lsh_pairs(
     import numpy as np
     import pandas as pd
 
-    from indexlab_spark.functions.vector import cosine
-
+    r = _check_banding(n_planes, bands)
     planes = hyperplanes(n_planes, dim, seed)
-    r = n_planes // bands
     v = F.col(vec_col).cast("array<double>")
 
     # One Arrow-batched matmul computes all n_planes dot-product signs per
@@ -1008,12 +988,9 @@ def embedding_lsh_pairs(
     band_keys = F.pandas_udf(_band_keys, "array<long>")
 
     sigs = df.select(F.col(id_col).alias("id"), band_keys(v).alias("keys"))
-    band_kv = sigs.select(
-        "id", F.posexplode("keys").alias("band_no", "key")
-    )
     # probe side reads this frame too — persist so the n_planes signature
     # folds run once per row, not twice
-    band_kv = _pin(band_kv)
+    band_kv = _pin(_band_rows(sigs, F.col("keys")))
 
     if multiprobe == "auto":
         # the flip-budget decision needs a row count. Counting the INPUT
@@ -1032,29 +1009,9 @@ def embedding_lsh_pairs(
             )
 
     if max_bucket is not None:
-        # Overfull-bucket guard: a degenerate band key (zero vectors, a
-        # giant constant-embedding cluster) makes one bucket whose pair
-        # count is O(occupancy^2) no matter how wide r is. Hot keys are
-        # at most n/max_bucket rows — a broadcast-sized frame; the one
-        # count() action below materializes band_kv, which the candidate
-        # join needs anyway (it is pinned).
-        hot = _pin(
-            band_kv.groupBy("band_no", "key")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > max_bucket)
-            .select("band_no", "key")
+        band_kv = band_kv.join(
+            _hot_buckets(band_kv, max_bucket), ["band", "key"], "left_anti"
         )
-        if hot.count():
-            print(
-                "embedding_lsh_pairs: dropping overfull (band,key) "
-                f"buckets with > {max_bucket} members from candidate "
-                "generation (pairs there remain reachable via their "
-                "other bands)",
-                file=sys.stderr,
-            )
-            band_kv = band_kv.join(
-                F.broadcast(hot), ["band_no", "key"], "left_anti"
-            )
 
     if multiprobe:
         # Probing is symmetric under xor (if hamming(ka, kb) == 1, a's flip
@@ -1062,7 +1019,7 @@ def embedding_lsh_pairs(
         # and the a.id < b.id filter still sees every qualifying pair.
         probe = band_kv.select(
             "id",
-            "band_no",
+            "band",
             F.explode(
                 F.array(
                     F.col("key"),
@@ -1073,13 +1030,7 @@ def embedding_lsh_pairs(
     else:
         probe = band_kv
 
-    cand = (
-        probe.alias("a")
-        .join(band_kv.alias("b"), ["band_no", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _bucket_pairs(probe, band_kv)
     if _return_candidates:
         return cand
     vecs = df.select(F.col(id_col).alias("id"), v.alias("v"))
@@ -2052,6 +2003,8 @@ def wminhash_signatures(
     ``split(lower, '\\s+')`` frame would tokenize ASCII-whitespace-only
     and skew summin vs sumw on unicode spacing. The id field's type
     follows ``df.schema[id_col]`` (string ids work, not just longs).
+    A document with no tokens (NULL, empty or blank text) gets no
+    signature row, as in the oracle and the other signature passes.
     """
     import pandas as pd
 
@@ -2061,17 +2014,13 @@ def wminhash_signatures(
         for pdf in batches:
             rows = []
             for did, text in zip(pdf["id"], pdf["text"]):
-                toks = [t for t in str(text).lower().split() if t]
+                toks = (text or "").lower().split()
+                if not toks:
+                    continue  # no tokens -> no signature (the oracle's rule)
                 tf: dict = {}
                 for t in toks:
                     tf[t] = tf.get(t, 0) + 1
-                sig = [
-                    f"{k}|{t}" if k is not None else ""
-                    for k, t in (
-                        s if s is not None else (None, 0)
-                        for s in icws_signature(tf, num_hashes)
-                    )
-                ]
+                sig = [f"{k}|{t}" for k, t in icws_signature(tf, num_hashes)]
                 rows.append((did, float(len(toks)), sig, tf))
             yield pd.DataFrame(rows, columns=["id", "sumw", "sig", "tf"])
 
@@ -2105,35 +2054,22 @@ def wminhash_lsh_pairs(
     Output: (id_a, id_b, wjaccard) with id_a < id_b, wjaccard >=
     threshold, 6dp.
     """
+    rows_per_band = _check_banding(num_hashes, bands)
     sigs = _pin(wminhash_signatures(df, id_col, text_col, num_hashes))
-    rows_per_band = max(1, num_hashes // bands)
-    band_keys = sigs.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "#",
-                        *[
-                            F.col("sig")[i]
-                            for i in range(
-                                b * rows_per_band, (b + 1) * rows_per_band
-                            )
-                        ],
-                    ).alias("key"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    cand = (
-        band_keys.alias("a")
-        .join(band_keys.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    band_keys = _band_rows(
+        sigs,
+        F.array(*[
+            F.concat_ws(
+                "#",
+                *[
+                    F.col("sig")[i]
+                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+                ],
+            )
+            for b in range(bands)
+        ]),
     )
+    cand = _bucket_pairs(band_keys, band_keys)
     # (term, tf) frame exploded from the SAME Arrow pass that built the
     # signatures — one tokenization path, so summin and sumw can never
     # disagree about what a token is (ADVICE r7).

@@ -937,6 +937,44 @@ def test_wminhash_oracle_sql_matches_python_chain():
     assert got == ref
 
 
+def test_wminhash_blank_docs_match_oracle(spark):
+    """NULL, empty and whitespace-only documents have no tokens, so
+    they get no ICWS signature and pair with nothing — as in the DuckDB
+    oracle (_wminhash_sql). Two NULL docs used to tokenize as the word
+    "none" and come out as a false exact duplicate, and every empty doc
+    was a candidate of every other."""
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as entry_mod
+    from indexlab_spark.operators.dedup import wminhash_lsh_pairs
+
+    base = "the quick brown fox jumps over the lazy dog near the river"
+    docs = [
+        (0, base),
+        (1, base + " today"),  # the planted near-dup of 0
+        (2, None),
+        (3, None),
+        (4, ""),
+        (5, ""),
+        (6, "   "),
+        (7, " \t\n "),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted(tuple(r) for r in wminhash_lsh_pairs(df, threshold=0.65).collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?,?)", docs)
+    want = sorted(
+        con.execute(entry_mod._wminhash_sql(threshold=0.65)).fetchall()
+    )
+    assert want and [(a, b) for a, b, _ in want] == [(0, 1)]
+    assert got == want
+
+
 def test_compression_quality_cross_engine_net(spark, sf_dir):
     """compression_quality is the registry's one PERMANENT rows-only
     entry: zlib is not SQL-expressible, so the driver can only

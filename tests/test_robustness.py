@@ -226,14 +226,27 @@ def test_asof_null_timestamps_and_ties(spark):
 
 def test_lsh_parameter_guards(spark, tables):
     from indexlab_spark.operators.dedup import (
-        minhash_lsh_pairs, simhash, simhash_pairs,
+        embedding_lsh_pairs, minhash_incremental_pairs, minhash_lsh_pairs,
+        simhash, simhash_pairs, wminhash_lsh_pairs,
     )
 
     docs = tables["documents"]
-    with pytest.raises(ValueError, match="multiple of"):
-        minhash_lsh_pairs(docs, num_hashes=16, bands=32)
-    with pytest.raises(ValueError, match="multiple of"):
-        minhash_lsh_pairs(docs, num_hashes=16, bands=5)
+    emb = tables["embeddings"]
+    # rows=0 (a constant band key: every pair a candidate) and a split
+    # whose remainder no band reads are refused before any job runs
+    for num_hashes, bands in [(16, 32), (16, 5)]:
+        with pytest.raises(ValueError, match="multiple of"):
+            minhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands)
+        with pytest.raises(ValueError, match="multiple of"):
+            minhash_incremental_pairs(
+                docs, docs, num_hashes=num_hashes, bands=bands
+            )
+    for num_hashes, bands in [(4, 8), (32, 5)]:
+        with pytest.raises(ValueError, match="multiple of"):
+            wminhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands)
+    for n_planes, bands in [(4, 8), (10, 4)]:
+        with pytest.raises(ValueError, match="multiple of"):
+            embedding_lsh_pairs(emb, n_planes=n_planes, bands=bands)
     sh = simhash(docs.limit(10))
     with pytest.raises(ValueError, match="pigeonhole"):
         simhash_pairs(sh, max_hamming=4, nbands=4)
